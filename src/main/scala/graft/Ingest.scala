@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Normalize
 import graft.operators.{Dedup, Resolve, Surrogate}
@@ -254,12 +255,21 @@ object Ingest {
     * pass through duplicated, exactly as the reference would
     * double-insert. */
   def importUsers(raw: DataFrame,
-                  noCheck: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
+                  noCheck: Boolean = false): (DataFrame, DataFrame, DataFrame) =
+    projectUsers(dedupUsers(raw, noCheck))
+
+  /** The dedup half of [[importUsers]]: one row per github id (all
+    * three user tables read this frame). */
+  def dedupUsers(raw: DataFrame, noCheck: Boolean = false): DataFrame = {
     val filtered = raw.filter(col("login").isNotNull)
-    val deduped =
-      if (noCheck) filtered
-      else firstBy(filtered, col("id"),
-        coalesce(col("updated_at"), col("created_at")).desc_nulls_last)
+    if (noCheck) filtered
+    else firstBy(filtered, col("id"),
+      coalesce(col("updated_at"), col("created_at")).desc_nulls_last)
+  }
+
+  /** The projection half of [[importUsers]]: deduped users → (users,
+    * gh_users, gh_organizations). */
+  def projectUsers(deduped: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val users = deduped.filter(col("type") === "User")
     val orgs = deduped.filter(col("type") === "Organization")
     val usersOut = users.select(
@@ -300,7 +310,15 @@ object Ingest {
     * broadcast at dimension scale. */
   def importRepos(raw: DataFrame,
                   existingRepos: Option[DataFrame] = None,
-                  existingGhRepos: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+                  existingGhRepos: Option[DataFrame] = None): (DataFrame, DataFrame) =
+    projectRepos(dedupRepos(raw, existingRepos, existingGhRepos))
+
+  /** The dedup half of [[importRepos]]: staging projection, latest-wins,
+    * non-empty-key guards and the double anti-join — the fresh repos,
+    * before surrogate ids (both repo tables read this frame). */
+  def dedupRepos(raw: DataFrame,
+                 existingRepos: Option[DataFrame] = None,
+                 existingGhRepos: Option[DataFrame] = None): DataFrame = {
     val staged = raw.select(
       clean("name").as("name"),
       clean("language").as("primary_language"),
@@ -331,12 +349,18 @@ object Ingest {
         e.select(col("github_id")), Seq("github_id"))
       case None => guarded
     }
-    val fresh = existingRepos match {
+    existingRepos match {
       case Some(e) => Dedup.antiJoinNew(afterGh,
         e.select(col("clone_path"), col("primary_language")),
         Seq("clone_path", "primary_language"))
       case None => afterGh
     }
+  }
+
+  /** The projection half of [[importRepos]]: fresh repos → dense
+    * surrogate ids → (repositories, gh_repositories). Eager: the id
+    * assignment runs its jobs at call time. */
+  def projectRepos(fresh: DataFrame): (DataFrame, DataFrame) = {
     // dense ids per clone_path (ties share an id, as dense_rank would)
     // without a single-partition global sort: rank the DISTINCT keys
     // scale-safely, then join the ids back on the dedup key
@@ -702,21 +726,21 @@ object Ingest {
     // always "finish the swap", never data loss.
     merges.foreach { case (_, path, _, _) => recoverSwap(hc, path) }
     // phase 1: compute + write every merge to its temp dir — while ALL
-    // target paths are still intact (see scaladoc)
-    val staged = merges.map { case (incoming, path, keys, order) =>
+    // target paths are still intact (see scaladoc), the tables
+    // concurrently
+    val staged = commitPhase(Nil)(merges.map { case (incoming, path, keys, order) =>
       val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hc)
       val merged =
         if (fs.exists(new org.apache.hadoop.fs.Path(path)))
           mergedFrame(spark.read.parquet(path), incoming, keys, order)
         else incoming
-      val tmp = s"$path.__tmp"
-      merged.write.mode("overwrite").parquet(tmp)
-      (tmp, path)
-    }
+      path -> merged
+    }) { (path, merged) => merged.write.mode("overwrite").parquet(s"$path.__tmp") }
     // phase 2: swap via rename-aside — the old data is never deleted
     // before the new data is in place, so a crash at ANY point leaves
     // either the old or the fully-merged table recoverable
-    staged.foreach { case (tmp, path) =>
+    staged.foreach { case (path, _) =>
+      val tmp = s"$path.__tmp"
       val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hc)
       val target = new org.apache.hadoop.fs.Path(path)
       val old = new org.apache.hadoop.fs.Path(s"$path.__old")
@@ -733,6 +757,28 @@ object Ingest {
       renameOrThrow(new org.apache.hadoop.fs.Path(tmp), target)
       fs.delete(old, true)
     }
+  }
+
+  /** One commit phase: persist the frames several of its tables read
+    * (once, MEMORY_AND_DISK), build the tables while those are
+    * persisted — a build may run jobs (the repos' surrogate ids do),
+    * which then fill the cache instead of scanning around it — and
+    * `write` every table concurrently, one pool thread per table. The
+    * shared frames are released in a `finally`. A failed write is
+    * rethrown naming its table once every started write has settled
+    * ([[Concurrently.run]]); tables that already committed stay
+    * committed. Returns the built tables. */
+  private def commitPhase(shared: Seq[DataFrame])(
+      build: => Seq[(String, DataFrame)])(
+      write: (String, DataFrame) => Unit): Seq[(String, DataFrame)] = {
+    shared.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    try {
+      val tables = build
+      Concurrently.run(tables.map { case (name, df) =>
+        name -> (() => write(name, df)) }, tables.size)(
+        name => s"table $name failed to commit")
+      tables
+    } finally shared.foreach(_.unpersist(blocking = false))
   }
 
   /** The per-table merge policy shared by the rename-swap path and the
@@ -1084,8 +1130,20 @@ object Ingest {
     }
 
   /** Run the whole pipeline over a config; writes each output table to
-    * `<warehouseDir>/<table>` parquet and returns the DataFrames. */
-  /** `noCheck` = the reference's `-nocheck` flag (ght2dm.go:1126):
+    * `<warehouseDir>/<table>` parquet and returns the DataFrames.
+    *
+    * Each entity folder is scanned once: the deduped users frame (read
+    * by users, gh_users, gh_organizations and, as a dimension, both
+    * relations) and the fresh repos frame (read by repositories,
+    * gh_repositories and users_repositories) are persisted for the
+    * duration of the call — the reference's stage-once-then-fill-every-
+    * table flow (db/insert_from_tmp_tables.sql). The tables' writes
+    * then run concurrently. If a write fails, every started write is
+    * allowed to settle and the first failure is rethrown naming its
+    * table; tables that already committed stay committed, as they
+    * would under a one-table-at-a-time order.
+    *
+    * `noCheck` = the reference's `-nocheck` flag (ght2dm.go:1126):
     * skip every is-it-already-present stage — the per-id user dedup
     * and the relation-existence dedups — for bulk loads the caller
     * knows are duplicate-free. The repos pipeline's latest-wins/
@@ -1095,18 +1153,42 @@ object Ingest {
           noCheck: Boolean = false): Map[String, DataFrame] = {
     val byEntity = cfg.ghtorrentFolders.map(f =>
       new java.io.File(f).getName -> f).toMap
-    var out = Map.empty[String, DataFrame]
+    val usersDeduped = byEntity.get("users").map(folder =>
+      dedupUsers(readEntity(spark, folder, userSchema), noCheck))
+    val reposFresh = byEntity.get("repos").map(folder =>
+      dedupRepos(readEntity(spark, folder, repoSchema)))
+    commitPhase(usersDeduped.toSeq ++ reposFresh)(
+        runTables(spark, cfg, byEntity, usersDeduped, reposFresh, noCheck)) {
+      (name, df) =>
+        val root = s"${cfg.warehouseDir}/$name"
+        // auto-detect too: a root previously declared versioned must
+        // never be clobbered by a plain overwrite from a config that
+        // forgot the flag
+        if (cfg.versionedWarehouse ||
+            graft.sources.Warehouse.isVersionedRoot(spark, root))
+          graft.sources.Warehouse.commitGeneration(spark, root)(p =>
+            df.write.parquet(p))
+        else
+          df.write.mode("overwrite").parquet(root)
+    }.toMap
+  }
 
-    val (users, ghUsers, ghOrgs) = byEntity.get("users") match {
-      case Some(folder) =>
-        val t = importUsers(readEntity(spark, folder, userSchema), noCheck)
+  /** [[run]]'s output tables, built over the (persisted) deduped users
+    * and fresh repos frames. */
+  private def runTables(spark: SparkSession, cfg: Config,
+      byEntity: Map[String, String], usersDeduped: Option[DataFrame],
+      reposFresh: Option[DataFrame], noCheck: Boolean): Seq[(String, DataFrame)] = {
+    var out = Map.empty[String, DataFrame]
+    val (users, ghUsers, ghOrgs) = usersDeduped match {
+      case Some(deduped) =>
+        val t = projectUsers(deduped)
         out ++= Map("users" -> t._1, "gh_users" -> t._2, "gh_organizations" -> t._3)
         t
       case None => (null, null, null)
     }
-    val (repos, ghRepos) = byEntity.get("repos") match {
-      case Some(folder) =>
-        val t = importRepos(readEntity(spark, folder, repoSchema))
+    val (repos, ghRepos) = reposFresh match {
+      case Some(fresh) =>
+        val t = projectRepos(fresh)
         out ++= Map("repositories" -> t._1, "gh_repositories" -> t._2)
         t
       case None => (null, null)
@@ -1173,18 +1255,6 @@ object Ingest {
         out += name -> importFn(readEntity(spark, folder, schema))
       }
     }
-    out.foreach { case (name, df) =>
-      val root = s"${cfg.warehouseDir}/$name"
-      // auto-detect too: a root previously declared versioned must
-      // never be clobbered by a plain overwrite from a config that
-      // forgot the flag
-      if (cfg.versionedWarehouse ||
-          graft.sources.Warehouse.isVersionedRoot(spark, root))
-        graft.sources.Warehouse.commitGeneration(spark, root)(p =>
-          df.write.parquet(p))
-      else
-        df.write.mode("overwrite").parquet(root)
-    }
-    out
+    out.toSeq
   }
 }

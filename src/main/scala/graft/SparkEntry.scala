@@ -188,8 +188,9 @@ object SparkEntry {
     * `sink` materializes each query (write, collect, count —
     * caller's choice) on the pool thread. Order of `names` is the
     * submission order: put long-running queries first (LPT) to bound
-    * the makespan. The first failure cancels what hasn't started and
-    * is rethrown with its query's name. */
+    * the makespan. The first failure cancels what hasn't started,
+    * waits for the queries already running, and is rethrown with its
+    * query's name ([[Concurrently.run]]). */
   def runAll(spark: SparkSession, dir: String, parallelism: Int = 8,
              names: Seq[String] = queries.keys.toSeq.sorted)
             (sink: (String, DataFrame) => Unit): Unit = {
@@ -209,22 +210,11 @@ object SparkEntry {
         clusterLabelCache.put((spark, dir), labels)
         Some(labels)
       } else None
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
     try {
-      val futures = names.map { name =>
-        name -> pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = sink(name, queries(name)(spark, dir))
-        })
-      }
-      futures.foreach { case (name, f) =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw new RuntimeException(s"runAll: query $name failed", e.getCause)
-        }
-      }
+      Concurrently.run(names.map(name =>
+          name -> (() => sink(name, queries(name)(spark, dir)))), parallelism)(
+        name => s"runAll: query $name failed")
     } finally {
-      pool.shutdownNow()
       sharedLabels.foreach { labels =>
         clusterLabelCache.remove((spark, dir))
         labels.unpersist()

@@ -9,14 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object Surrogate {
 
-  /** Deterministic, oracle-comparable ids: dense_rank over a total order
-    * of the natural key. NOTE: a global window means a single-partition
-    * sort — fine for dimension-sized outputs (the reference assigns these
-    * ids to deduped repos, i.e. post-dedup cardinality), wrong for fact
-    * tables; use [[scaleSafeIds]] there. */
-  def denseIds(df: DataFrame, orderBy: Seq[Column], idName: String): DataFrame =
-    df.withColumn(idName, dense_rank().over(Window.orderBy(orderBy: _*)))
-
   /** Scale path: unique (not contiguous) 64-bit ids with no shuffle and
     * no global sort — partition id in the high bits, per-partition
     * counter in the low bits. Use when ids only need uniqueness +

@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.DumpSource
@@ -1285,5 +1287,165 @@ class IngestSpec extends AnyFunSuite {
     Seq((1L, "x")).toDF("id", "v").write.parquet(plain)
     assert(Warehouse.resolveAuto(spark, plain) == plain)
     assert(Warehouse.readAt(spark, plain).count() == 1)
+  }
+
+  /** A seeded four-entity dump set (BSON bodies, four daily shards per
+    * entity) with re-shipped users and repos; returns (root, docs). */
+  private def fourEntityDumps(prefix: String): (String, Long) = {
+    import graft.functions.Bson
+    val dir = Files.createTempDirectory(Paths.get("target").toAbsolutePath, prefix).toString
+    val shards = 4
+    def login(k: Int) = if (k % 20 == 0) s"org_$k" else s"user_$k"
+    def day(i: Int) = java.time.LocalDate.of(2014, 1, 1).plusDays(i.toLong)
+    var docs = 0L
+    def write(entity: String, n: Int)(shipped: Int => Seq[(Int, Array[Byte])]): Unit = {
+      Files.createDirectories(Paths.get(s"$dir/$entity"))
+      val byShard = (0 until n).flatMap(shipped).groupBy(_._1)
+      (0 until shards).foreach { sh =>
+        val bodies = byShard.getOrElse(sh, Nil).map(_._2)
+        docs += bodies.size
+        DumpSource.writeDump(s"$dir/$entity/${day(sh)}.bson", bodies.iterator)
+      }
+    }
+    def shardOf(i: Int, n: Int) = i * shards / n
+    def later(sh: Int) = math.min(sh + 1, shards - 1)
+    write("users", 400) { k =>
+      def doc(updated: String) = Bson.docBody(Seq("id" -> (1000L + k),
+        "login" -> login(k), "type" -> (if (k % 20 == 0) "Organization" else "User"),
+        "name" -> s"Name $k", "email" -> s"u$k@example.org",
+        "created_at" -> "2013-01-01T00:00:00Z", "updated_at" -> updated,
+        "followers" -> k.toLong, "following" -> 1L, "hireable" -> (k % 2 == 0)))
+      val sh = shardOf(k, 400)
+      (sh, doc("2013-06-01T00:00:00Z")) +:
+        (if (k % 10 == 3) Seq(later(sh) -> doc("2013-07-01T00:00:00Z")) else Nil)
+    }
+    def owner(j: Int) = login((j * 7) % 400)
+    write("repos", 300) { j =>
+      def doc(updated: String, openIssues: Long) = Bson.docBody(Seq(
+        "id" -> (5000L + j), "name" -> s"repo_$j",
+        "full_name" -> s"${owner(j)}/repo_$j",
+        "language" -> Seq("Go", "Rust", "Scala")(j % 3),
+        "clone_url" -> s"https://github.example/${owner(j)}/repo_$j.git",
+        "owner" -> Seq("login" -> owner(j)), "fork" -> false,
+        "forks_count" -> 0L, "open_issues_count" -> openIssues,
+        "stargazers_count" -> 1L, "subscribers_count" -> 1L,
+        "watchers_count" -> 1L, "size_in_kb" -> 10L,
+        "created_at" -> "2014-01-01T00:00:00Z", "updated_at" -> updated,
+        "pushed_at" -> updated))
+      val sh = shardOf(j, 300)
+      (sh, doc("2014-01-01T10:00:00Z", 5L)) +:
+        (if (j % 10 == 4) Seq(later(sh) -> doc("2014-01-02T10:00:00Z", 3L)) else Nil)
+    }
+    write("org_members", 150) { i =>
+      Seq(shardOf(i, 150) -> Bson.docBody(Seq("id" -> i.toLong,
+        "login" -> login(i * 13 % 400 | 1), "org" -> s"org_${i % 20 * 20}",
+        "type" -> "User")))
+    }
+    write("repo_collaborators", 200) { i =>
+      val j = i * 11 % 300
+      Seq(shardOf(i, 200) -> Bson.docBody(Seq("id" -> i.toLong,
+        "login" -> login(i * 17 % 400 | 1), "repo" -> s"repo_$j",
+        "owner" -> owner(j))))
+    }
+    (dir, docs)
+  }
+
+  private def fourEntityConfig(dir: String, warehouse: String) =
+    Ingest.Config(Seq("users", "repos", "org_members", "repo_collaborators")
+      .map(e => s"$dir/$e"), warehouse)
+
+  /** Rows `DumpSource` batch scans emitted across every executed plan;
+    * a persisted frame's plan counts once, at its materialization. */
+  private final class DumpScanRows
+      extends org.apache.spark.sql.util.QueryExecutionListener {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val rows = new java.util.concurrent.atomic.AtomicLong()
+    private val cachedSeen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    private def scanned(p: SparkPlan): Long = p match {
+      case a: AdaptiveSparkPlanExec => scanned(a.executedPlan)
+      case s: QueryStageExec => scanned(s.plan)
+      case _: ReusedExchangeExec => 0L
+      case m: InMemoryTableScanExec =>
+        if (cachedSeen.add(m.relation.cacheBuilder)) scanned(m.relation.cachedPlan)
+        else 0L
+      case b: BatchScanExec if b.table.isInstanceOf[graft.sources.DumpTable] =>
+        b.metrics("numOutputRows").value
+      case other => (other.children ++ other.subqueries).map(scanned).sum
+    }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      rows.addAndGet(scanned(qe.executedPlan))
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+  }
+
+  test("run() scans each dump folder once: the rows DumpSource emits " +
+    "equal the input docs") {
+    val (dir, docs) = fourEntityDumps("ingest_onescan")
+    val scans = new DumpScanRows
+    spark.listenerManager.register(scans)
+    val out = try {
+      val t = Ingest.run(spark, fourEntityConfig(dir, s"$dir/wh"))
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      t
+    } finally spark.listenerManager.unregister(scans)
+    assert(scans.rows.get == docs,
+      s"DumpSource emitted ${scans.rows.get} rows for $docs docs " +
+        f"(${scans.rows.get.toDouble / docs}%.2fx)")
+    // the tables are the import's, not an artefact of the counting
+    val counts = Seq("users", "gh_users", "gh_organizations", "repositories",
+      "gh_repositories").map(t => t -> spark.read.parquet(s"$dir/wh/$t").count()).toMap
+    assert(counts == Map("users" -> 380L, "gh_users" -> 380L,
+      "gh_organizations" -> 20L, "repositories" -> 300L, "gh_repositories" -> 300L),
+      s"got $counts")
+    assert(out("users_repositories").count() > 0)
+    assert(out("gh_users_organizations").count() > 0)
+  }
+
+  test("run() commit failure: the error names a table, no write is still " +
+    "running on return, and no persisted frame outlives the call on the " +
+    "failure or the success path") {
+    val (dir, _) = fourEntityDumps("ingest_commitfail")
+    val sc = spark.sparkContext
+    // every table's write fails: the warehouse lies below a regular file
+    Files.writeString(Paths.get(s"$dir/blocker"), "not a directory")
+    val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val jobEnds = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobStarts.put(e.jobId, e.time)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        jobEnds.put(e.jobId, e.time)
+    }
+    // DedupSpec's leak check: the one persistent RDD a run may leave is
+    // the surrogate-id copy Surrogate.rangeDenseIds pins for the repos
+    // frames it returns; the persisted users/repos frames must be gone
+    def leakedBy(body: => Unit): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      body
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    sc.addSparkListener(jobs)
+    var returnedAt = 0L
+    val failedLeak = try leakedBy {
+      val e = intercept[RuntimeException] {
+        try Ingest.run(spark, fourEntityConfig(dir, s"$dir/blocker/wh"))
+        finally returnedAt = System.currentTimeMillis()
+      }
+      val tables = Seq("users", "gh_users", "gh_organizations", "repositories",
+        "gh_repositories", "gh_users_organizations", "users_repositories")
+      assert(tables.exists(t => e.getMessage.contains(s"table $t ")), e.getMessage)
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(jobs)
+    val running = jobStarts.keySet.asScala -- jobEnds.keySet.asScala
+    assert(running.isEmpty, s"jobs still running after run() returned: $running")
+    assert(jobStarts.values.asScala.forall(_ <= returnedAt),
+      "a job started after run() returned")
+    assert(failedLeak <= 1, s"$failedLeak persistent RDDs left by the failed run")
+    val okLeak = leakedBy(Ingest.run(spark, fourEntityConfig(dir, s"$dir/wh")))
+    assert(okLeak <= 1, s"$okLeak persistent RDDs left by the successful run")
   }
 }
