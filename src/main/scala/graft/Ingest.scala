@@ -744,20 +744,23 @@ object Ingest {
       val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hc)
       val target = new org.apache.hadoop.fs.Path(path)
       val old = new org.apache.hadoop.fs.Path(s"$path.__old")
-      // HDFS-style FileSystems report rename failure by returning
-      // false, not by throwing — an unchecked failed rename-in would
-      // leave the target missing while this run reports success
-      // (readers see no table until the NEXT merge's recoverSwap).
-      def renameOrThrow(src: org.apache.hadoop.fs.Path,
-                        dst: org.apache.hadoop.fs.Path): Unit =
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"rename $src -> $dst failed")
       if (fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(target)) renameOrThrow(target, old)
-      renameOrThrow(new org.apache.hadoop.fs.Path(tmp), target)
+      if (fs.exists(target)) renameOrThrow(fs, target, old)
+      renameOrThrow(fs, new org.apache.hadoop.fs.Path(tmp), target)
       fs.delete(old, true)
     }
   }
+
+  /** HDFS-style FileSystems report rename failure by returning false,
+    * not by throwing. Unchecked, a failed rename-in leaves the target
+    * missing while the run reports success, and a failed recovery
+    * rename lets the next merge overwrite the complete `__tmp` with
+    * the incoming batch alone. */
+  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
+                            src: org.apache.hadoop.fs.Path,
+                            dst: org.apache.hadoop.fs.Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"rename $src -> $dst failed")
 
   /** One commit phase: persist the frames several of its tables read
     * (once, MEMORY_AND_DISK), build the tables while those are
@@ -842,8 +845,8 @@ object Ingest {
     val tmpComplete = fs.exists(tmp) &&
       fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
     if (!fs.exists(target)) {
-      if (tmpComplete) fs.rename(tmp, target)
-      else if (fs.exists(old)) fs.rename(old, target)
+      if (tmpComplete) renameOrThrow(fs, tmp, target)
+      else if (fs.exists(old)) renameOrThrow(fs, old, target)
     }
     if (fs.exists(target)) {
       if (fs.exists(tmp)) fs.delete(tmp, true)

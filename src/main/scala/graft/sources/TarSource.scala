@@ -4,6 +4,7 @@ import java.io.{BufferedInputStream, DataInputStream, EOFException, IOException}
 import java.util
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -12,6 +13,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 for POSIX ustar TAR archives — the container of the
   * WebDataset layout (Aizman et al.: tar shards of grouped sample
@@ -334,9 +336,7 @@ class TarTable(paths: Seq[String]) extends Table with SupportsRead {
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // session Hadoop conf captured ON THE DRIVER (see WarcTable)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      DumpSource.activeHadoopConf())
+    val conf = DumpSource.activeHadoopConf()
     val splitBytes = options.getLong("splitbytes", 64L << 20)
     new ScanBuilder with Scan with Batch {
       override def build(): Scan = this
@@ -344,13 +344,13 @@ class TarTable(paths: Seq[String]) extends Table with SupportsRead {
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] =
         paths.flatMap(p =>
-          TarSource.planSplits(p, splitBytes, conf.value)
+          TarSource.planSplits(p, splitBytes, conf)
             .map(sp => sp: InputPartition)).toArray
       override def createReaderFactory(): PartitionReaderFactory =
-        new TarReaderFactory(conf)
+        new TarReaderFactory(DumpSource.broadcastHadoopConf(conf))
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-        new TarMicroBatchStream(paths, conf,
+        new TarMicroBatchStream(paths, new SerializableConfiguration(conf),
           Option(options.get("maxfilespertrigger")).map(_.toInt))
     }
   }
@@ -370,7 +370,7 @@ class TarTable(paths: Seq[String]) extends Table with SupportsRead {
   * lexicographic name order over `*.tar` (shard names sort — the
   * `shard-000000.tar` convention). */
 class TarMicroBatchStream(paths: Seq[String],
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: SerializableConfiguration,
     maxFilesPerTrigger: Option[Int] = None)
   extends DumpMicroBatchStream(paths, conf, maxFilesPerTrigger) {
 
@@ -387,7 +387,7 @@ class TarMicroBatchStream(paths: Seq[String],
     TarFilePartition(path, 0L, Long.MaxValue)
 
   override protected def readerFactory(): PartitionReaderFactory =
-    new TarReaderFactory(conf)
+    new TarReaderFactory(DumpSource.broadcastHadoopConf(conf.value))
 
   override protected def orderingContract: String =
     "a shard sorting lexicographically before already-processed names " +
@@ -399,7 +399,7 @@ class TarMicroBatchStream(paths: Seq[String],
 case class TarFilePartition(path: String, start: Long, end: Long)
   extends InputPartition
 
-class TarReaderFactory(conf: org.apache.spark.util.SerializableConfiguration)
+class TarReaderFactory(conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new TarPartitionReader(partition.asInstanceOf[TarFilePartition], conf)
@@ -412,11 +412,11 @@ class TarReaderFactory(conf: org.apache.spark.util.SerializableConfiguration)
   * block boundary (archives without the optional zero trailer) ends
   * the walk. */
 class TarPartitionReader(part: TarFilePartition,
-    conf: org.apache.spark.util.SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
   extends PartitionReader[InternalRow] {
 
   private val fsPath = new Path(part.path)
-  private val fs = fsPath.getFileSystem(conf.value)
+  private val fs = fsPath.getFileSystem(conf.value.value)
   private val fileLen = fs.getFileStatus(fsPath).getLen
   private val pathUtf8 = UTF8String.fromString(part.path)
   private val limit = math.min(part.end, fileLen)

@@ -4,6 +4,7 @@ import java.io.{BufferedInputStream, DataInputStream, EOFException, IOException}
 import java.util
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -11,6 +12,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 for WARC (Web ARChive, ISO 28500) files — the format
   * web crawls (Common Crawl and friends) ship in, and the raw input of
@@ -334,10 +336,7 @@ class WarcTable(paths: Seq[String]) extends Table with SupportsRead {
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // capture the session's Hadoop conf ON THE DRIVER (executors have
-    // no active session; a bare Configuration drops store credentials)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      DumpSource.activeHadoopConf())
+    val conf = DumpSource.activeHadoopConf()
     val splitBytes = options.getLong("splitbytes", 64L << 20)
     new ScanBuilder with Scan with Batch {
       override def build(): Scan = this
@@ -345,13 +344,13 @@ class WarcTable(paths: Seq[String]) extends Table with SupportsRead {
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] =
         paths.flatMap(p =>
-          WarcSource.planSplits(p, splitBytes, conf.value)
+          WarcSource.planSplits(p, splitBytes, conf)
             .map(sp => sp: InputPartition)).toArray
       override def createReaderFactory(): PartitionReaderFactory =
-        new WarcReaderFactory(conf)
+        new WarcReaderFactory(DumpSource.broadcastHadoopConf(conf))
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-        new WarcMicroBatchStream(paths, conf,
+        new WarcMicroBatchStream(paths, new SerializableConfiguration(conf),
           Option(options.get("maxfilespertrigger")).map(_.toInt))
     }
   }
@@ -369,7 +368,7 @@ class WarcTable(paths: Seq[String]) extends Table with SupportsRead {
   * lexicographic name order over `*.warc` / `*.warc.gz` (crawl shard
   * names sort — the CC segment convention). */
 class WarcMicroBatchStream(paths: Seq[String],
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: SerializableConfiguration,
     maxFilesPerTrigger: Option[Int] = None)
   extends DumpMicroBatchStream(paths, conf, maxFilesPerTrigger) {
 
@@ -386,7 +385,7 @@ class WarcMicroBatchStream(paths: Seq[String],
     WarcFilePartition(path, 0L, Long.MaxValue, path.endsWith(".gz"))
 
   override protected def readerFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(conf)
+    new WarcReaderFactory(DumpSource.broadcastHadoopConf(conf.value))
 
   override protected def orderingContract: String =
     "a shard sorting lexicographically before already-processed names " +
@@ -399,7 +398,7 @@ case class WarcFilePartition(path: String, start: Long, end: Long,
                              gz: Boolean = false)
   extends InputPartition
 
-class WarcReaderFactory(conf: org.apache.spark.util.SerializableConfiguration)
+class WarcReaderFactory(conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[WarcFilePartition]
@@ -412,11 +411,11 @@ class WarcReaderFactory(conf: org.apache.spark.util.SerializableConfiguration)
   * after `part.start` (offset 0 needs no scan), then parses records
   * until one would START at or past `part.end`. */
 class WarcPartitionReader(part: WarcFilePartition,
-    conf: org.apache.spark.util.SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
   extends PartitionReader[InternalRow] {
 
   private val fsPath = new Path(part.path)
-  private val fs = fsPath.getFileSystem(conf.value)
+  private val fs = fsPath.getFileSystem(conf.value.value)
   private val fileLen = fs.getFileStatus(fsPath).getLen
   private val pathUtf8 = UTF8String.fromString(part.path)
 
@@ -552,11 +551,11 @@ class WarcPartitionReader(part: WarcFilePartition,
   * indexes publish). One inflated record in memory at a time, CRC and
   * ISIZE verified per member. */
 class GzWarcPartitionReader(part: WarcFilePartition,
-    conf: org.apache.spark.util.SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
   extends PartitionReader[InternalRow] {
 
   private val fsPath = new Path(part.path)
-  private val fs = fsPath.getFileSystem(conf.value)
+  private val fs = fsPath.getFileSystem(conf.value.value)
   private val fileLen = fs.getFileStatus(fsPath).getLen
   private val pathUtf8 = UTF8String.fromString(part.path)
   private val limit = math.min(part.end, fileLen)

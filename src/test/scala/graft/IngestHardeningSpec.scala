@@ -64,6 +64,28 @@ class IngestHardeningSpec extends AnyFunSuite {
     assert(!fs(t).exists(new Path(s"$t.__tmp")))
   }
 
+  test("a recovery rename that reports failure aborts the merge and " +
+    "keeps the complete __tmp") {
+    // the swap's file operations resolve through the context-wide conf
+    val hc = spark.sparkContext.hadoopConfiguration
+    SchemeFs.settings.foreach { case (k, v) => hc.set(k, v) }
+    try {
+      val t = SchemeFs.tmpDir("merge_rename_fails") + "/t"
+      // the crash window: target gone, complete merged table in __tmp
+      Seq(1L, 2L).toDF("id").write.parquet(s"$t.__tmp")
+      SchemeFs.failRenames = true
+      val e = try intercept[java.io.IOException] {
+        Ingest.mergeParquet(spark, Seq(3L).toDF("id"), t, Seq("id"))
+      } finally SchemeFs.failRenames = false
+      assert(e.getMessage.contains("rename"))
+      assert(!fs(t).exists(new Path(t)))
+      assert(ids(s"$t.__tmp") == Set(1L, 2L))
+      // once renames work again, the next merge recovers and loses nothing
+      Ingest.mergeParquet(spark, Seq(3L).toDF("id"), t, Seq("id"))
+      assert(ids(t) == Set(1L, 2L, 3L))
+    } finally SchemeFs.settings.foreach { case (k, _) => hc.unset(k) }
+  }
+
   test("relation batches arriving before their dimension tables skip " +
     "instead of killing the stream, and resolve on re-ship") {
     val dir = tmpDir("rel_before_dims")

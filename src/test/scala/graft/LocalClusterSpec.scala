@@ -66,7 +66,10 @@ class LocalClusterSpec extends AnyFunSuite {
     // round 15: the subword fastText model reference object (input/
     // output matrices + transient lazy wordIds map) rebuilt per
     // executor JVM, and the main-content struct kernel
-    "q_lang_id4", "q_main_content")
+    "q_lang_id4", "q_main_content",
+    // the dump, WARC and tar readers resolve their broadcast Hadoop
+    // conf inside the executor JVMs
+    "q_dump_source_bson", "q_warc_gz", "q_tar_ingest")
 
   /** Round-12 real-decode surface (imageio thumbnails, GIF codec
     * frames, javax.sound audio headers): mapPartitions closures over
