@@ -346,8 +346,9 @@ class TarTable(paths: Seq[String]) extends Table with SupportsRead {
         paths.flatMap(p =>
           TarSource.planSplits(p, splitBytes, conf)
             .map(sp => sp: InputPartition)).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
+      private lazy val readerFactory =
         new TarReaderFactory(DumpSource.broadcastHadoopConf(conf))
+      override def createReaderFactory(): PartitionReaderFactory = readerFactory
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
         new TarMicroBatchStream(paths, new SerializableConfiguration(conf),

@@ -346,8 +346,9 @@ class WarcTable(paths: Seq[String]) extends Table with SupportsRead {
         paths.flatMap(p =>
           WarcSource.planSplits(p, splitBytes, conf)
             .map(sp => sp: InputPartition)).toArray
-      override def createReaderFactory(): PartitionReaderFactory =
+      private lazy val readerFactory =
         new WarcReaderFactory(DumpSource.broadcastHadoopConf(conf))
+      override def createReaderFactory(): PartitionReaderFactory = readerFactory
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
         new WarcMicroBatchStream(paths, new SerializableConfiguration(conf),

@@ -79,6 +79,18 @@ class SourceHadoopConfSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // planning asks once per copy of the scan node; each ask used to
+  // cost a fresh broadcast of the whole conf
+  test("a batch scan broadcasts its conf once, however often its factory is asked for") {
+    val dir = Files.createTempDirectory("factory_once").toString
+    tables.foreach { case (kind, table) =>
+      val batch = table(Seq(dir))
+        .newScanBuilder(CaseInsensitiveStringMap.empty()).build().toBatch
+      assert(batch.createReaderFactory() eq batch.createReaderFactory(),
+        s"$kind batch scan built a second reader factory")
+    }
+  }
+
   test("session-scoped Hadoop settings reach the executor-side readers") {
     SchemeFs.settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
