@@ -62,7 +62,9 @@ object Ght2dm {
       val tables = Ingest.run(spark, cfg, noCheck)
       if (verbose)
         tables.toSeq.sortBy(_._1).foreach { case (name, _) =>
-          val n = spark.read.parquet(s"${cfg.warehouseDir}/$name").count()
+          // readAuto: a versioned root holds generations, not parquet
+          val n = graft.sources.Warehouse.readAuto(spark,
+            s"${cfg.warehouseDir}/$name").count()
           out(s"[$name] $n rows -> ${cfg.warehouseDir}/$name")
         }
       0

@@ -34,6 +34,11 @@ import graft.sources.DumpSource
   * test fixtures) through `from_json`. A BSON body's first byte is an
   * element type (≤ 0x13), a JSON doc's is `{`, so one byte dispatches
   * (see [[decodeDoc]]).
+  *
+  * Each entity's facts — folder name, doc schema, output tables and
+  * their merge keys and merge order — are one row of the entity table
+  * ([[EntitySpec]], `entities` below), which both [[run]] and
+  * [[runStream]] read.
   */
 object Ingest {
 
@@ -223,10 +228,13 @@ object Ingest {
   def readEntity(spark: SparkSession, folder: String, schema: StructType): DataFrame = {
     val paths = DumpSource.listDateOrdered(folder)
     require(paths.nonEmpty, s"no YYYY-MM-DD.bson files in $folder")
-    spark.read.format("graft.sources.DumpDataSource").load(paths: _*)
-      .select(decodeDoc(col("doc"), schema).as("e"))
-      .select(col("e.*"))
+    decodeAll(spark.read.format("graft.sources.DumpDataSource").load(paths: _*),
+      schema)
   }
+
+  /** Framed docs (batch or streaming) → parsed columns. */
+  private def decodeAll(docs: DataFrame, schema: StructType): DataFrame =
+    docs.select(decodeDoc(col("doc"), schema).as("e")).select(col("e.*"))
 
   private def clean(c: String) = Normalize.removeNullBytes(col(c))
   private def cleanDate(c: String) =
@@ -560,9 +568,9 @@ object Ingest {
     * [[graft.sources.DumpSource]] visits first — wins:
     * `monotonically_increasing_id` carries the input partition
     * ordinal in its high bits and the source maps one partition per
-    * file in newest-first visitation order, so ascending id order IS
-    * visitation order, computed narrowly before the window
-    * shuffle). */
+    * file in newest-first visitation order (a batch scan and a stream
+    * micro-batch alike), so ascending id order IS visitation order,
+    * computed narrowly before the window shuffle). */
   def importRepoLabels(raw: DataFrame): DataFrame = {
     val deduped = firstBy(raw.filter(col("id").isNotNull &&
         clean("owner") =!= "" && clean("repo") =!= ""),
@@ -695,10 +703,8 @@ object Ingest {
     * github_id identity), while `order = Some(sortExprs)` keeps, per
     * key, the FIRST row under that ordering across existing ∪
     * incoming, incoming winning exact ties so a re-shipped identical
-    * snapshot converges. Latest-wins kinds (issues / pull_requests /
-    * comments) pass `updated_at.desc_nulls_last`; oldest-wins kinds
-    * (watchers' earliest star, forks' first sighting) pass
-    * `asc_nulls_last`. The ordered path shuffles existing ∪ incoming
+    * snapshot converges. Each entity's policy is declared in its
+    * [[EntitySpec]] row. The ordered path shuffles existing ∪ incoming
     * once on the key — the same cost class as the anti-join the
     * insert-if-absent path pays, and at warehouse scale the policy
     * maps onto a MERGE ... WHEN MATCHED AND incoming.ord > existing
@@ -710,10 +716,10 @@ object Ingest {
     // exists — Warehouse.initVersioned declares it once) must never go
     // through the rename-swap below: spark.read.parquet on the root
     // would double-read gen dirs and the swap would destroy the
-    // layout. Detecting here covers every caller — the batch run(),
-    // ALL run*Stream continuous merges, and mergeParquetAll — so a
-    // stream pointed at a versioned warehouse gets snapshot-isolated
-    // commits without threading a flag through 14 entry points.
+    // layout. Detecting here covers every caller — each runStream
+    // micro-batch merge and mergeParquetAll — so a stream pointed at a
+    // versioned warehouse gets snapshot-isolated commits with no flag
+    // on any entry point.
     val (versioned, merges) = allMerges.partition { case (_, path, _, _) =>
       graft.sources.Warehouse.isVersionedRoot(spark, path) }
     if (versioned.nonEmpty) mergeParquetOrderedAllVersioned(spark, versioned)
@@ -854,258 +860,199 @@ object Ingest {
     }
   }
 
-  private[graft] def mergeParquet(spark: SparkSession, incoming: DataFrame,
-                                  path: String, keys: Seq[String]): Unit =
-    mergeParquetAll(spark, Seq((incoming, path, keys)))
+  /** One table an entity's decoded docs become, with its cross-batch
+    * merge policy ([[mergeParquetOrderedAll]]): `keys` identify a row;
+    * `order = None` is insert-if-absent, `Some(ord)` keeps the first row
+    * per key under `ord` over existing ∪ incoming. */
+  private case class EntityTable(name: String, keys: Seq[String],
+      order: Option[Seq[org.apache.spark.sql.Column]] = None)
 
-  /** Continuous ingestion: stream a users dump folder (new daily shards
-    * become micro-batches, see [[graft.sources.DumpMicroBatchStream]])
-    * and merge every batch into the warehouse with the SAME operators
-    * the batch path uses — `foreachBatch` is the standard bridge from
-    * a stream to batch merge logic. Exactly-once per file via the
-    * checkpointed source offset + idempotent merge keys. */
-  def runUsersStream(spark: SparkSession, folder: String, warehouseDir: String,
-                     checkpoint: String, maxFilesPerTrigger: Option[Int] = None):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, userSchema, checkpoint, maxFilesPerTrigger) { batch =>
+  /** What [[EntitySpec.toTables]] gets besides the decoded docs: the
+    * warehouse roots of the entity's own tables (in `tables` order), its
+    * dimension frames (in `dims` order) and the `-nocheck` flag (false
+    * in a stream). */
+  private case class ImportCtx(spark: SparkSession, roots: Seq[String],
+      dims: Seq[DataFrame], noCheck: Boolean)
+
+  /** One row of the entity table: the dump folder name, the doc schema,
+    * the tables the decoded docs become and `toTables`, which builds one
+    * frame per table. `dims` names the warehouse tables the entity
+    * resolves against; `sourceKind`, when set, is stamped on every
+    * decoded row as `source_kind`. */
+  private case class EntitySpec(entity: String, schema: StructType,
+      tables: Seq[EntityTable],
+      toTables: (ImportCtx, DataFrame) => Seq[DataFrame],
+      dims: Seq[String] = Nil, sourceKind: Option[String] = None) {
+    def tagged(decoded: DataFrame): DataFrame =
+      sourceKind.fold(decoded)(k => decoded.withColumn("source_kind", lit(k)))
+  }
+
+  /** A row whose decoded docs become one table through `importFn`. */
+  private def plain(entity: String, schema: StructType, table: EntityTable)(
+      importFn: DataFrame => DataFrame): EntitySpec =
+    EntitySpec(entity, schema, Seq(table), (_, batch) => Seq(importFn(batch)))
+
+  // insert-if-absent on github_id, the identity of a user or org
+  private val usersEntity = EntitySpec("users", userSchema,
+    Seq("users", "gh_users", "gh_organizations").map(EntityTable(_, Seq("github_id"))),
+    { (_, batch) =>
       val (users, ghUsers, ghOrgs) = importUsers(batch)
-      mergeParquetAll(spark, Seq(
-        (users, s"$warehouseDir/users", Seq("github_id")),
-        (ghUsers, s"$warehouseDir/gh_users", Seq("github_id")),
-        (ghOrgs, s"$warehouseDir/gh_organizations", Seq("github_id"))))
-    }
+      Seq(users, ghUsers, ghOrgs)
+    })
 
-  /** Continuous repo ingestion: each micro-batch runs the full staged →
-    * latest-wins → double-anti-join pipeline against the CURRENT
-    * warehouse, shifts the fresh surrogate ids past the existing
-    * maximum (the `RETURNING id` sequence continuing across imports),
-    * and merges. Replaying a batch after a failure is a no-op: the
-    * anti-join sees the previously merged rows and yields zero fresh. */
-  def runReposStream(spark: SparkSession, folder: String, warehouseDir: String,
-                     checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, repoSchema, checkpoint) { batch =>
-        val repoPath = s"$warehouseDir/repositories"
-        val ghPath = s"$warehouseDir/gh_repositories"
-        val fs = new org.apache.hadoop.fs.Path(repoPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val existing =
-          if (fs.exists(new org.apache.hadoop.fs.Path(repoPath)))
-            Some(spark.read.parquet(repoPath)) else None
-        val existingGh =
-          if (fs.exists(new org.apache.hadoop.fs.Path(ghPath)))
-            Some(spark.read.parquet(ghPath)) else None
-        val (repos, gh) = importRepos(batch,
-          existingRepos = existing.map(_.select(col("clone_path"),
-            col("primary_language"))),
-          existingGhRepos = existingGh.map(_.select(col("github_id"))))
-        val base = existing.map(_.agg(max(col("id"))).head())
-          .collect { case r if !r.isNullAt(0) => r.getLong(0) }
-          .getOrElse(0L)
-        // merge on the SAME composite key the freshness anti-join uses
-        // ((clone_path, primary_language), insert_from_tmp_tables.sql:52-54)
-        // — merging on clone_path alone would drop a re-shipped repo whose
-        // language changed, leaving its gh_repositories row dangling
-        mergeParquetAll(spark, Seq(
-          (repos.withColumn("id", col("id") + base),
-            repoPath, Seq("clone_path", "primary_language")),
-          (gh.withColumn("repository_id", col("repository_id") + base),
-            ghPath, Seq("github_id"))))
-    }
+  // a stream batch runs the full staged → latest-wins → double-anti-join
+  // pipeline against the CURRENT warehouse and shifts the fresh
+  // surrogate ids past its maximum (the `RETURNING id` sequence
+  // continuing across imports), so replaying a batch after a failure
+  // yields zero fresh rows. repositories merges on the anti-join's
+  // composite key (insert_from_tmp_tables.sql:52-54): clone_path alone
+  // would drop a re-shipped repo whose language changed, leaving its
+  // gh_repositories row dangling
+  private val reposEntity = EntitySpec("repos", repoSchema, Seq(
+      EntityTable("repositories", Seq("clone_path", "primary_language")),
+      EntityTable("gh_repositories", Seq("github_id"))),
+    { (ctx, batch) =>
+      val Seq(existing, existingGh) = ctx.roots.map(r =>
+        dimsIfPresent(ctx.spark, Seq(r)).map(_.head))
+      val (repos, gh) = importRepos(batch,
+        existingRepos = existing.map(_.select(col("clone_path"),
+          col("primary_language"))),
+        existingGhRepos = existingGh.map(_.select(col("github_id"))))
+      val base = existing.map(_.agg(max(col("id"))).head())
+        .collect { case r if !r.isNullAt(0) => r.getLong(0) }
+        .getOrElse(0L)
+      Seq(repos.withColumn("id", col("id") + base),
+        gh.withColumn("repository_id", col("repository_id") + base))
+    })
 
-  /** The shared continuous-ingestion scaffold every run*Stream uses:
-    * streaming dump source → decode → `foreachBatch(sink)`, checkpointed,
-    * AvailableNow. The sink owns the batch→warehouse merge logic. */
-  private def entityStream(spark: SparkSession, folder: String,
-      schema: StructType, checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = None)(sink: DataFrame => Unit):
+  /** The comment kinds, one per source folder `<kind>_comments`. All
+    * feed the one `comments` table, which is safe because the anchor
+    * kind is part of [[importComments]]' identity: the kinds are
+    * separate GitHub id sequences, so neither a batch union nor
+    * concurrent streams can cross-collide on id. The kind is TAGGED
+    * from the folder: inferring it from commit_id null-ness would
+    * reclassify a commit comment whose sha failed the permissive decode
+    * as an issue comment. Latest-wins per (kind, id) by `updated_at`,
+    * because comments are editable. */
+  private def commentsEntity(kind: String) = EntitySpec(s"${kind}_comments",
+    commentSchema, Seq(EntityTable("comments", Seq("kind", "github_id"),
+      Some(Seq(col("updated_at").desc_nulls_last)))),
+    (_, batch) => Seq(importComments(batch)), sourceKind = Some(kind))
+
+  /** The entities `run` builds straight from their row, in `run`'s
+    * order. Users and repos are not here: `run` builds their tables
+    * from frames it persists once and shares across tables. */
+  private val tableEntities: Seq[EntitySpec] = Seq(
+    // the relations resolve against the CURRENT dims; a stream batch
+    // arriving before its dims is skipped, not fatal, and its rows
+    // resolve when re-shipped (the reference's skip-on-missing-id,
+    // ght2dm.go:757-765)
+    EntitySpec("org_members", orgMemberSchema,
+      Seq(EntityTable("gh_users_organizations",
+        Seq("gh_user_id", "gh_organization_id"))),
+      (ctx, batch) =>
+        Seq(importOrgMembers(batch, ctx.dims(0), ctx.dims(1), ctx.noCheck)),
+      dims = Seq("gh_users", "gh_organizations")),
+    EntitySpec("repo_collaborators", repoCollaboratorSchema,
+      Seq(EntityTable("users_repositories", Seq("user_id", "repository_id"))),
+      (ctx, batch) =>
+        Seq(importRepoCollaborators(batch, ctx.dims(0), ctx.dims(1), ctx.noCheck)),
+      dims = Seq("gh_users", "gh_repositories"))) ++
+    Seq("commit", "issue", "pull_request").map(commentsEntity) ++ Seq(
+    // insert-if-absent: across stream batches the EARLIER shipped copy
+    // wins, the first-wins policy the batch import applies within a
+    // dump set
+    plain("commits", commitSchema, EntityTable("commits", Seq("sha")))(importCommits),
+    plain("events", eventSchema, EntityTable("events", Seq("event_id")))(importEvents),
+    // latest `updated_at` wins: a re-shipped OLDER snapshot (an
+    // out-of-order dump replay) must not overwrite newer warehouse state
+    plain("issues", issueSchema, EntityTable("issues", Seq("github_id"),
+      Some(Seq(col("updated_at").desc_nulls_last))))(importIssues),
+    plain("pull_requests", pullRequestSchema, EntityTable("pull_requests",
+      Seq("github_id"), Some(Seq(col("updated_at").desc_nulls_last))))(
+      importPullRequests),
+    // oldest-wins: the cross-batch twin of importWatchers' within-batch
+    // min(starred_at); a late batch carrying an EARLIER star replaces it
+    plain("watchers", watcherSchema, EntityTable("watchers",
+      Seq("login", "repo_full_name"), Some(Seq(col("starred_at").asc_nulls_last))))(
+      importWatchers),
+    // earliest forked_at: the cross-batch twin of importForks' first-wins
+    plain("forks", forkSchema, EntityTable("forks", Seq("fork_github_id"),
+      Some(Seq(col("forked_at").asc_nulls_last))))(importForks),
+    // incoming-wins: labels are renamed/recolored in place and carry no
+    // payload timestamp, so batch arrival order (each batch is a newer
+    // dump day) is the only freshness signal. The constant sort ties
+    // every pair and the merge's incoming-wins-ties rule keeps the
+    // newest batch's copy
+    plain("repo_labels", repoLabelSchema, EntityTable("repo_labels",
+      Seq("label_github_id"), Some(Seq(lit(0).asc))))(importRepoLabels),
+    // latest `updated_at`: the cache refreshes in place on geocode retry,
+    // and an out-of-order replay must not roll a fresher fix back
+    plain("geo_locations", geoLocationSchema, EntityTable("geo_locations",
+      Seq("location"), Some(Seq(col("updated_at").desc_nulls_last))))(
+      importGeoLocations),
+    // earliest followed_at per edge: the cross-batch twin of
+    // importFollowers' within-batch min, like a watcher's star
+    plain("followers", followerSchema, EntityTable("followers",
+      Seq("follower_login", "followed_login"),
+      Some(Seq(col("followed_at").asc_nulls_last))))(importFollowers),
+    // insert-if-absent: timeline entries are immutable
+    plain("issue_events", issueEventSchema,
+      EntityTable("issue_events", Seq("event_github_id")))(importIssueEvents),
+    // insert-if-absent per (pr, sha): the payload is immutable and the
+    // pair re-ships daily
+    plain("pull_request_commits", pullRequestCommitSchema,
+      EntityTable("pull_request_commits", Seq("pr_id", "sha")))(
+      importPullRequestCommits))
+
+  /** The entity table: every entity [[run]] and [[runStream]] import. */
+  private val entities: Seq[EntitySpec] = usersEntity +: reposEntity +: tableEntities
+
+  /** Continuous ingestion of one entity: stream its dump folder (new
+    * daily shards become micro-batches, see
+    * [[graft.sources.DumpMicroBatchStream]]) and merge every batch into
+    * the warehouse with the SAME operators the batch path uses, under
+    * the entity's per-table merge policy. `foreachBatch` is the standard
+    * bridge from a stream to batch merge logic. Exactly-once per file
+    * via the checkpointed source offset + idempotent merge keys;
+    * AvailableNow. `entity` is a dump folder name [[run]] knows (the
+    * comment kinds are `commit_comments`, `issue_comments` and
+    * `pull_request_comments`); anything else is rejected before a query
+    * starts. */
+  def runStream(spark: SparkSession, entity: String, folder: String,
+                warehouseDir: String, checkpoint: String,
+                maxFilesPerTrigger: Option[Int] = None):
       org.apache.spark.sql.streaming.StreamingQuery = {
+    val spec = entities.find(_.entity == entity).getOrElse(
+      throw new IllegalArgumentException(s"unknown entity '$entity'; " +
+        s"known entities: ${entities.map(_.entity).mkString(", ")}"))
+    val roots = spec.tables.map(t => s"$warehouseDir/${t.name}")
     val reader = spark.readStream.format("graft.sources.DumpDataSource")
     // bounded catch-up: cap each micro-batch at N daily shards so a
     // backlog drains in bounded-memory steps with bounded per-batch
     // warehouse merges (the source freezes the listing under
     // AvailableNow, so the drain has a fixed endpoint either way)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.load(folder)
-      .select(decodeDoc(col("doc"), schema).as("e"))
-      .select(col("e.*"))
+    decodeAll(reader.load(folder), spec.schema)
       .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => sink(batch) }
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        dimsIfPresent(spark, spec.dims.map(d => s"$warehouseDir/$d")).foreach { dims =>
+          val frames = spec.toTables(ImportCtx(spark, roots, dims, noCheck = false),
+            spec.tagged(batch))
+          mergeParquetOrderedAll(spark, spec.tables.lazyZip(frames).lazyZip(roots)
+            .map((t, df, root) => (df, root, t.keys, t.order)))
+        }
+      }
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
   }
 
-  /** Continuous commits ingestion: each daily shard micro-batch runs
-    * [[importCommits]] (within-batch first-wins per sha) and merges
-    * idempotently on sha — across batches the EARLIER shipped copy
-    * wins, because the merge only inserts shas absent from the
-    * warehouse (the same first-wins policy the batch path applies
-    * within a dump set). */
-  def runCommitsStream(spark: SparkSession, folder: String, warehouseDir: String,
-                       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, commitSchema, checkpoint) { batch =>
-      mergeParquetAll(spark, Seq((importCommits(batch),
-        s"$warehouseDir/commits", Seq("sha"))))
-    }
-
-  /** Continuous events ingestion; see [[runCommitsStream]] — merge key
-    * is the event id. */
-  def runEventsStream(spark: SparkSession, folder: String, warehouseDir: String,
-                      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, eventSchema, checkpoint) { batch =>
-      mergeParquetAll(spark, Seq((importEvents(batch),
-        s"$warehouseDir/events", Seq("event_id"))))
-    }
-
-  /** Continuous issues ingestion: latest-wins ACROSS batches — each
-    * micro-batch dedupes within itself ([[importIssues]]) and the
-    * merge keeps, per issue id, the newest `updated_at` over
-    * existing ∪ incoming — a re-shipped OLDER snapshot (out-of-order
-    * dump replay) must NOT overwrite newer warehouse state, which
-    * the insert-if-absent merge commits/events use can't express. */
-  def runIssuesStream(spark: SparkSession, folder: String, warehouseDir: String,
-                      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, issueSchema, checkpoint) { batch =>
-      mergeParquetOrderedAll(spark, Seq((importIssues(batch),
-        s"$warehouseDir/issues", Seq("github_id"),
-        Some(Seq(col("updated_at").desc_nulls_last)))))
-    }
-
-  /** Continuous pull-request ingestion; latest-wins per PR id by
-    * `updated_at`, see [[runIssuesStream]]. */
-  def runPullRequestsStream(spark: SparkSession, folder: String, warehouseDir: String,
-                            checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, pullRequestSchema, checkpoint) { batch =>
-      mergeParquetOrderedAll(spark, Seq((importPullRequests(batch),
-        s"$warehouseDir/pull_requests", Seq("github_id"),
-        Some(Seq(col("updated_at").desc_nulls_last)))))
-    }
-
-  /** Continuous comments ingestion — one stream per source folder,
-    * the kind TAGGED from the folder basename (commit_comments /
-    * issue_comments), exactly like the batch `run()` dispatch: the
-    * anchor kind is part of the merge identity, so both streams can
-    * feed the one `comments` table concurrently with a shared
-    * warehouse and never cross-collide on id. Latest-wins per
-    * (kind, id) by `updated_at` (comments are editable). */
-  def runCommentsStream(spark: SparkSession, folder: String, warehouseDir: String,
-                        checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val kind = new java.io.File(folder).getName match {
-      case "commit_comments" => "commit"
-      case "issue_comments" => "issue"
-      case "pull_request_comments" => "pull_request"
-      case other => throw new IllegalArgumentException(
-        s"comments stream folder must be named commit_comments, " +
-        s"issue_comments or pull_request_comments (the kind comes " +
-        s"from the folder), got '$other'")
-    }
-    entityStream(spark, folder, commentSchema, checkpoint) { batch =>
-      mergeParquetOrderedAll(spark, Seq((
-        importComments(batch.withColumn("source_kind", lit(kind))),
-        s"$warehouseDir/comments", Seq("kind", "github_id"),
-        Some(Seq(col("updated_at").desc_nulls_last)))))
-    }
-  }
-
-  /** Continuous watchers ingestion: OLDEST-wins — the warehouse keeps
-    * the earliest `starred_at` per (login, repo), the cross-batch
-    * twin of [[importWatchers]]' within-batch `min(starred_at)`; a
-    * late batch carrying an EARLIER star than the stored one must
-    * replace it, which again insert-if-absent can't express. */
-  def runWatchersStream(spark: SparkSession, folder: String, warehouseDir: String,
-                        checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, watcherSchema, checkpoint) { batch =>
-      mergeParquetOrderedAll(spark, Seq((importWatchers(batch),
-        s"$warehouseDir/watchers", Seq("login", "repo_full_name"),
-        Some(Seq(col("starred_at").asc_nulls_last)))))
-    }
-
-  /** Continuous forks ingestion: earliest `forked_at` wins per fork
-    * repo id — the cross-batch twin of [[importForks]]' first-wins. */
-  def runForksStream(spark: SparkSession, folder: String, warehouseDir: String,
-                     checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, forkSchema, checkpoint) { batch =>
-      mergeParquetOrderedAll(spark, Seq((importForks(batch),
-        s"$warehouseDir/forks", Seq("fork_github_id"),
-        Some(Seq(col("forked_at").asc_nulls_last)))))
-    }
-
-  /** Continuous repo-label ingestion: INCOMING-wins per label id —
-    * labels are renamed/recolored in place and carry no payload
-    * timestamp, so the only freshness signal is batch arrival order
-    * (each micro-batch is a newer dump day). The constant sort makes
-    * every existing/incoming pair tie, and the merge's
-    * incoming-wins-ties rule keeps the newest batch's copy. */
-  def runRepoLabelsStream(spark: SparkSession, folder: String, warehouseDir: String,
-                          checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, repoLabelSchema, checkpoint) { batch =>
-      mergeParquetOrderedAll(spark, Seq((importRepoLabels(batch),
-        s"$warehouseDir/repo_labels", Seq("label_github_id"),
-        Some(Seq(lit(0).asc)))))
-    }
-
-  /** Continuous geo-location ingestion: latest `updated_at` wins per
-    * location text — the cache refreshes in place on geocode retry,
-    * and an out-of-order replay must not roll a fresher fix back. */
-  def runGeoLocationsStream(spark: SparkSession, folder: String, warehouseDir: String,
-                            checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, geoLocationSchema, checkpoint) { batch =>
-      mergeParquetOrderedAll(spark, Seq((importGeoLocations(batch),
-        s"$warehouseDir/geo_locations", Seq("location"),
-        Some(Seq(col("updated_at").desc_nulls_last)))))
-    }
-
-  /** Continuous follower ingestion: earliest `followed_at` wins per
-    * (follower, followed) edge — the cross-batch twin of
-    * [[importFollowers]]' within-batch `min`, like watchers' star. */
-  def runFollowersStream(spark: SparkSession, folder: String, warehouseDir: String,
-                         checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, followerSchema, checkpoint) { batch =>
-      mergeParquetOrderedAll(spark, Seq((importFollowers(batch),
-        s"$warehouseDir/followers", Seq("follower_login", "followed_login"),
-        Some(Seq(col("followed_at").asc_nulls_last)))))
-    }
-
-  /** Continuous issue-event ingestion: insert-if-absent per event id
-    * (timeline entries are immutable, the commits/events policy). */
-  def runIssueEventsStream(spark: SparkSession, folder: String, warehouseDir: String,
-                           checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, issueEventSchema, checkpoint) { batch =>
-      mergeParquetAll(spark, Seq((importIssueEvents(batch),
-        s"$warehouseDir/issue_events", Seq("event_github_id"))))
-    }
-
-  /** Continuous PR-commit ingestion: insert-if-absent per (pr, sha)
-    * pair (immutable payload; the pair re-ships daily). */
-  def runPullRequestCommitsStream(spark: SparkSession, folder: String, warehouseDir: String,
-                                  checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, pullRequestCommitSchema, checkpoint) { batch =>
-      mergeParquetAll(spark, Seq((importPullRequestCommits(batch),
-        s"$warehouseDir/pull_request_commits", Seq("pr_id", "sha"))))
-    }
-
-  /** Continuous relation ingestion: org-membership (and, with
-    * [[runCollaboratorsStream]], repo-collaborator) rows resolve
-    * against the CURRENT warehouse dimensions per micro-batch and
-    * merge on the composite key — rows whose dims haven't arrived yet
-    * simply drop this batch and resolve when re-shipped (the
-    * reference's skip-on-missing-id behavior, ght2dm.go:757-765). */
-  def runMembersStream(spark: SparkSession, folder: String, warehouseDir: String,
-                       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, orgMemberSchema, checkpoint) { batch =>
-        // skip-on-missing-dims, like the reference's skip-on-missing-id
-        // (ght2dm.go:757-765): a relation shard arriving before its
-        // dimension tables must not kill the stream — the rows resolve
-        // when re-shipped after the dims land
-        dimsIfPresent(spark, Seq(s"$warehouseDir/gh_users",
-            s"$warehouseDir/gh_organizations")).foreach {
-          case Seq(users, orgs) =>
-            val out = importOrgMembers(batch, users, orgs)
-            mergeParquetAll(spark, Seq((out,
-              s"$warehouseDir/gh_users_organizations",
-              Seq("gh_user_id", "gh_organization_id"))))
-        }
-    }
+  /** [[runStream]] for `users`. */
+  def runUsersStream(spark: SparkSession, folder: String, warehouseDir: String,
+                     checkpoint: String, maxFilesPerTrigger: Option[Int] = None):
+      org.apache.spark.sql.streaming.StreamingQuery =
+    runStream(spark, "users", folder, warehouseDir, checkpoint, maxFilesPerTrigger)
 
   /** All dimension tables read, or None if any is not yet present. */
   private def dimsIfPresent(spark: SparkSession,
@@ -1116,21 +1063,6 @@ object Ingest {
     if (paths.forall(graft.sources.Warehouse.existsAuto(spark, _)))
       Some(paths.map(graft.sources.Warehouse.readAuto(spark, _))) else None
   }
-
-  /** See [[runMembersStream]]; resolves login + owner/repo full_name. */
-  def runCollaboratorsStream(spark: SparkSession, folder: String, warehouseDir: String,
-                             checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    entityStream(spark, folder, repoCollaboratorSchema, checkpoint) { batch =>
-        // see runMembersStream: skip (not crash) while dims are absent
-        dimsIfPresent(spark, Seq(s"$warehouseDir/gh_users",
-            s"$warehouseDir/gh_repositories")).foreach {
-          case Seq(users, repos) =>
-            val out = importRepoCollaborators(batch, users, repos)
-            mergeParquetAll(spark, Seq((out,
-              s"$warehouseDir/users_repositories",
-              Seq("user_id", "repository_id"))))
-        }
-    }
 
   /** Run the whole pipeline over a config; writes each output table to
     * `<warehouseDir>/<table>` parquet and returns the DataFrames.
@@ -1156,12 +1088,12 @@ object Ingest {
           noCheck: Boolean = false): Map[String, DataFrame] = {
     val byEntity = cfg.ghtorrentFolders.map(f =>
       new java.io.File(f).getName -> f).toMap
-    val usersDeduped = byEntity.get("users").map(folder =>
-      dedupUsers(readEntity(spark, folder, userSchema), noCheck))
-    val reposFresh = byEntity.get("repos").map(folder =>
-      dedupRepos(readEntity(spark, folder, repoSchema)))
+    def read(spec: EntitySpec): Option[DataFrame] = byEntity.get(spec.entity)
+      .map(folder => spec.tagged(readEntity(spark, folder, spec.schema)))
+    val usersDeduped = read(usersEntity).map(dedupUsers(_, noCheck))
+    val reposFresh = read(reposEntity).map(dedupRepos(_))
     commitPhase(usersDeduped.toSeq ++ reposFresh)(
-        runTables(spark, cfg, byEntity, usersDeduped, reposFresh, noCheck)) {
+        runTables(spark, cfg, read, usersDeduped, reposFresh, noCheck)) {
       (name, df) =>
         val root = s"${cfg.warehouseDir}/$name"
         // auto-detect too: a root previously declared versioned must
@@ -1179,83 +1111,45 @@ object Ingest {
   /** [[run]]'s output tables, built over the (persisted) deduped users
     * and fresh repos frames. */
   private def runTables(spark: SparkSession, cfg: Config,
-      byEntity: Map[String, String], usersDeduped: Option[DataFrame],
+      read: EntitySpec => Option[DataFrame], usersDeduped: Option[DataFrame],
       reposFresh: Option[DataFrame], noCheck: Boolean): Seq[(String, DataFrame)] = {
     var out = Map.empty[String, DataFrame]
-    val (users, ghUsers, ghOrgs) = usersDeduped match {
-      case Some(deduped) =>
-        val t = projectUsers(deduped)
-        out ++= Map("users" -> t._1, "gh_users" -> t._2, "gh_organizations" -> t._3)
-        t
-      case None => (null, null, null)
+    def add(spec: EntitySpec, frames: Seq[DataFrame]): Unit =
+      out ++= spec.tables.map(_.name).zip(frames)
+    usersDeduped.foreach { deduped =>
+      val (users, ghUsers, ghOrgs) = projectUsers(deduped)
+      add(usersEntity, Seq(users, ghUsers, ghOrgs))
     }
-    val (repos, ghRepos) = reposFresh match {
-      case Some(fresh) =>
-        val t = projectRepos(fresh)
-        out ++= Map("repositories" -> t._1, "gh_repositories" -> t._2)
-        t
-      case None => (null, null)
+    reposFresh.foreach { fresh =>
+      val (repos, ghRepos) = projectRepos(fresh)
+      add(reposEntity, Seq(repos, ghRepos))
     }
     // relation kinds resolve against dimensions: from this run's
     // imports when the dim folders are configured, else from the
-    // EXISTING warehouse (like runMembersStream's dimsIfPresent) —
-    // and fail with guidance when neither exists, instead of the
-    // bare NPE a null dim frame used to cause (the reference
-    // resolves against the live DB, ght2dm.go:757-765, so a
-    // relation-only config degrades there rather than crashes)
-    def dimOr(inMemory: DataFrame, table: String, forKind: String): DataFrame =
-      if (inMemory != null) inMemory
-      else dimsIfPresent(spark, Seq(s"${cfg.warehouseDir}/$table")) match {
-        case Some(Seq(df)) => df
-        case _ => throw new IllegalArgumentException(
-          s"config lists '$forKind' but no source for dimension '$table': " +
-          s"configure the dim folder too, or run against a warehouse " +
-          s"(${cfg.warehouseDir}) that already holds $table")
-      }
-    byEntity.get("org_members").foreach { folder =>
-      out += "gh_users_organizations" -> importOrgMembers(
-        readEntity(spark, folder, orgMemberSchema),
-        dimOr(ghUsers, "gh_users", "org_members"),
-        dimOr(ghOrgs, "gh_organizations", "org_members"), noCheck)
-    }
-    byEntity.get("repo_collaborators").foreach { folder =>
-      out += "users_repositories" -> importRepoCollaborators(
-        readEntity(spark, folder, repoCollaboratorSchema),
-        dimOr(ghUsers, "gh_users", "repo_collaborators"),
-        dimOr(ghRepos, "gh_repositories", "repo_collaborators"), noCheck)
-    }
-    // the round-7 entity kinds: plain projections, no dim dependencies.
-    // Both comment folders feed ONE `comments` table — safe because
-    // importComments' identity is (kind, id), so the union can't
-    // cross-collide (the kinds are separate GitHub id sequences).
-    // The kind is TAGGED from the source folder here — inferring it
-    // from commit_id null-ness would silently reclassify a commit
-    // comment whose sha failed the permissive decode as an issue
-    // comment, colliding with a real issue comment of the same id
-    val commentFrames = Seq("commit_comments" -> "commit",
-        "issue_comments" -> "issue",
-        "pull_request_comments" -> "pull_request")
-      .flatMap { case (folder, kind) =>
-        byEntity.get(folder).map(readEntity(spark, _, commentSchema)
-          .withColumn("source_kind", lit(kind)))
-      }
-    if (commentFrames.nonEmpty)
-      out += "comments" -> importComments(commentFrames.reduce(_ unionByName _))
-    Seq[(String, StructType, DataFrame => DataFrame)](
-      ("commits", commitSchema, importCommits),
-      ("events", eventSchema, importEvents),
-      ("issues", issueSchema, importIssues),
-      ("pull_requests", pullRequestSchema, importPullRequests),
-      ("watchers", watcherSchema, importWatchers),
-      ("forks", forkSchema, importForks),
-      ("repo_labels", repoLabelSchema, importRepoLabels),
-      ("geo_locations", geoLocationSchema, importGeoLocations),
-      ("followers", followerSchema, importFollowers),
-      ("issue_events", issueEventSchema, importIssueEvents),
-      ("pull_request_commits", pullRequestCommitSchema, importPullRequestCommits)
-    ).foreach { case (name, schema, importFn) =>
-      byEntity.get(name).foreach { folder =>
-        out += name -> importFn(readEntity(spark, folder, schema))
+    // EXISTING warehouse (like a relation stream) — and fail with
+    // guidance when neither exists, instead of the bare NPE a null dim
+    // frame used to cause (the reference resolves against the live DB,
+    // ght2dm.go:757-765, so a relation-only config degrades there
+    // rather than crashes)
+    def dim(table: String, forKind: String): DataFrame =
+      out.getOrElse(table,
+        dimsIfPresent(spark, Seq(s"${cfg.warehouseDir}/$table")) match {
+          case Some(Seq(df)) => df
+          case _ => throw new IllegalArgumentException(
+            s"config lists '$forKind' but no source for dimension '$table': " +
+            s"configure the dim folder too, or run against a warehouse " +
+            s"(${cfg.warehouseDir}) that already holds $table")
+        })
+    // entities sharing a table (the comment kinds) import as one union
+    tableEntities.map(_.tables.head.name).distinct.foreach { table =>
+      val specs = tableEntities.filter(_.tables.head.name == table)
+      val decoded = specs.flatMap(read)
+      if (decoded.nonEmpty) {
+        val spec = specs.head
+        val ctx = ImportCtx(spark,
+          spec.tables.map(t => s"${cfg.warehouseDir}/${t.name}"),
+          spec.dims.map(dim(_, spec.entity)), noCheck)
+        add(spec, spec.toTables(ctx, decoded.reduce(_ unionByName _)))
       }
     }
     out.toSeq

@@ -380,8 +380,15 @@ class DumpMicroBatchStream(paths: Seq[String],
             (if (s > 0 && s <= files.length) s", position $s is '${baseName(files(s - 1))}'" else "") +
             s"); $orderingContract")
     }
-    files.slice(s, e).map(partitionFor).toArray
+    scanOrder(files.slice(s, e)).map(partitionFor).toArray
   }
+
+  /** The order a micro-batch reads its files in: the batch scan's,
+    * newest dump date first (`listFiles` runs oldest-first because the
+    * offsets count from the oldest file). An import that keeps the
+    * first-read copy of a key (`Ingest.importRepoLabels`) then keeps the
+    * same copy whether a dump set is streamed or batch-read. */
+  protected def scanOrder(files: Seq[String]): Seq[String] = files.reverse
 
   override def createReaderFactory(): PartitionReaderFactory =
     readerFactory()

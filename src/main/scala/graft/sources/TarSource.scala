@@ -390,6 +390,9 @@ class TarMicroBatchStream(paths: Seq[String],
   override protected def readerFactory(): PartitionReaderFactory =
     new TarReaderFactory(DumpSource.broadcastHadoopConf(conf.value))
 
+  // shards are read in name order, as listed
+  override protected def scanOrder(files: Seq[String]): Seq[String] = files
+
   override protected def orderingContract: String =
     "a shard sorting lexicographically before already-processed names " +
       "arrived late (WebDataset shard folders must be append-only in " +

@@ -388,6 +388,9 @@ class WarcMicroBatchStream(paths: Seq[String],
   override protected def readerFactory(): PartitionReaderFactory =
     new WarcReaderFactory(DumpSource.broadcastHadoopConf(conf.value))
 
+  // shards are read in name order, as listed
+  override protected def scanOrder(files: Seq[String]): Seq[String] = files
+
   override protected def orderingContract: String =
     "a shard sorting lexicographically before already-processed names " +
       "arrived late (WARC folders must be append-only in name order)"

@@ -32,12 +32,12 @@ class IngestHardeningSpec extends AnyFunSuite {
   test("merge recovers a crash between rename-aside and rename-in " +
     "(target missing, complete __tmp present)") {
     val dir = tmpDir("merge_crash_tmp"); val t = s"$dir/t"
-    Ingest.mergeParquet(spark, Seq(1L, 2L).toDF("id"), t, Seq("id"))
+    Ingest.mergeParquetAll(spark, Seq((Seq(1L, 2L).toDF("id"), t, Seq("id"))))
     // simulate the crash window: the swap renamed the target aside and
     // died before renaming the merged tmp in — tmp holds the COMPLETE
     // merged table (incl. _SUCCESS), target is gone
     assert(fs(t).rename(new Path(t), new Path(s"$t.__tmp")))
-    Ingest.mergeParquet(spark, Seq(3L).toDF("id"), t, Seq("id"))
+    Ingest.mergeParquetAll(spark, Seq((Seq(3L).toDF("id"), t, Seq("id"))))
     assert(ids(t) == Set(1L, 2L, 3L)) // nothing lost, batch merged on top
     assert(!fs(t).exists(new Path(s"$t.__tmp")))
   }
@@ -45,9 +45,9 @@ class IngestHardeningSpec extends AnyFunSuite {
   test("merge recovers a crash right after rename-aside " +
     "(target missing, only __old present)") {
     val dir = tmpDir("merge_crash_old"); val t = s"$dir/t"
-    Ingest.mergeParquet(spark, Seq(1L, 2L).toDF("id"), t, Seq("id"))
+    Ingest.mergeParquetAll(spark, Seq((Seq(1L, 2L).toDF("id"), t, Seq("id"))))
     assert(fs(t).rename(new Path(t), new Path(s"$t.__old")))
-    Ingest.mergeParquet(spark, Seq(3L).toDF("id"), t, Seq("id"))
+    Ingest.mergeParquetAll(spark, Seq((Seq(3L).toDF("id"), t, Seq("id"))))
     assert(ids(t) == Set(1L, 2L, 3L))
     assert(!fs(t).exists(new Path(s"$t.__old")))
   }
@@ -55,11 +55,11 @@ class IngestHardeningSpec extends AnyFunSuite {
   test("a partial __tmp next to an intact target is discarded, not " +
     "recovered (phase-1 crash on a later run)") {
     val dir = tmpDir("merge_stale_tmp"); val t = s"$dir/t"
-    Ingest.mergeParquet(spark, Seq(1L).toDF("id"), t, Seq("id"))
+    Ingest.mergeParquetAll(spark, Seq((Seq(1L).toDF("id"), t, Seq("id"))))
     // partial write: directory without _SUCCESS
     Files.createDirectories(Paths.get(s"$t.__tmp"))
     Files.writeString(Paths.get(s"$t.__tmp/garbage"), "not parquet")
-    Ingest.mergeParquet(spark, Seq(2L).toDF("id"), t, Seq("id"))
+    Ingest.mergeParquetAll(spark, Seq((Seq(2L).toDF("id"), t, Seq("id"))))
     assert(ids(t) == Set(1L, 2L))
     assert(!fs(t).exists(new Path(s"$t.__tmp")))
   }
@@ -75,13 +75,13 @@ class IngestHardeningSpec extends AnyFunSuite {
       Seq(1L, 2L).toDF("id").write.parquet(s"$t.__tmp")
       SchemeFs.failRenames = true
       val e = try intercept[java.io.IOException] {
-        Ingest.mergeParquet(spark, Seq(3L).toDF("id"), t, Seq("id"))
+        Ingest.mergeParquetAll(spark, Seq((Seq(3L).toDF("id"), t, Seq("id"))))
       } finally SchemeFs.failRenames = false
       assert(e.getMessage.contains("rename"))
       assert(!fs(t).exists(new Path(t)))
       assert(ids(s"$t.__tmp") == Set(1L, 2L))
       // once renames work again, the next merge recovers and loses nothing
-      Ingest.mergeParquet(spark, Seq(3L).toDF("id"), t, Seq("id"))
+      Ingest.mergeParquetAll(spark, Seq((Seq(3L).toDF("id"), t, Seq("id"))))
       assert(ids(t) == Set(1L, 2L, 3L))
     } finally SchemeFs.settings.foreach { case (k, _) => hc.unset(k) }
   }
@@ -98,7 +98,7 @@ class IngestHardeningSpec extends AnyFunSuite {
     def run(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
       q.processAllAvailable(); q.stop()
     }
-    run(Ingest.runMembersStream(spark, s"$dir/org_members", wh, s"$dir/_ck_m"))
+    run(Ingest.runStream(spark, "org_members", s"$dir/org_members", wh, s"$dir/_ck_m"))
     assert(!fs(wh).exists(new Path(s"$wh/gh_users_organizations")))
 
     writeDocs(s"$dir/users/2014-01-01.bson", Seq(
@@ -106,8 +106,8 @@ class IngestHardeningSpec extends AnyFunSuite {
       """{"id":3,"login":"devmine","type":"Organization","name":"DevMine","created_at":"2013-03-01T00:00:00Z","updated_at":""}"""))
     writeDocs(s"$dir/org_members/2014-01-02.bson", Seq(
       """{"id":1,"login":"alice","org":"devmine","type":"User"}"""))
-    run(Ingest.runUsersStream(spark, s"$dir/users", wh, s"$dir/_ck_u"))
-    run(Ingest.runMembersStream(spark, s"$dir/org_members", wh, s"$dir/_ck_m"))
+    run(Ingest.runStream(spark, "users", s"$dir/users", wh, s"$dir/_ck_u"))
+    run(Ingest.runStream(spark, "org_members", s"$dir/org_members", wh, s"$dir/_ck_m"))
     assert(spark.read.parquet(s"$wh/gh_users_organizations").count() == 1)
   }
 
@@ -120,7 +120,7 @@ class IngestHardeningSpec extends AnyFunSuite {
       s"""{"id":$id,"name":"ght2dm","full_name":"devmine/ght2dm","language":"$lang","clone_url":"https://github.example/devmine/ght2dm.git","owner":{"login":"devmine"},"fork":false,"forks_count":1,"open_issues_count":5,"stargazers_count":10,"subscribers_count":2,"watchers_count":10,"size_in_kb":512,"created_at":"2014-01-01T00:00:00Z","updated_at":"2014-01-0${day}T10:00:00Z","pushed_at":"2014-01-0${day}T09:00:00Z"}"""
     writeDocs(s"$dir/repos/2014-01-01.bson", Seq(repo(100, "Go", 1)))
     def runOnce(): Unit = {
-      val q = Ingest.runReposStream(spark, s"$dir/repos", wh, s"$dir/_ck")
+      val q = Ingest.runStream(spark, "repos", s"$dir/repos", wh, s"$dir/_ck")
       q.processAllAvailable(); q.stop()
     }
     runOnce()

@@ -137,7 +137,7 @@ class IngestSpec extends AnyFunSuite {
       """{"id":3,"login":"devmine","type":"Organization","name":"DevMine","created_at":"2013-03-01T00:00:00Z","updated_at":""}"""))
 
     def runOnce(): Unit = {
-      val q = Ingest.runUsersStream(spark, s"$dir/users", wh, ckpt)
+      val q = Ingest.runStream(spark, "users", s"$dir/users", wh, ckpt)
       q.processAllAvailable(); q.stop()
     }
     runOnce()
@@ -165,7 +165,7 @@ class IngestSpec extends AnyFunSuite {
       """{"id":100,"name":"ght2dm","full_name":"devmine/ght2dm","language":"Go","clone_url":"https://github.example/devmine/ght2dm.git","owner":{"login":"devmine"},"fork":false,"forks_count":1,"open_issues_count":5,"stargazers_count":10,"subscribers_count":2,"watchers_count":10,"size_in_kb":512,"created_at":"2014-01-01T00:00:00Z","updated_at":"2014-01-01T10:00:00Z","pushed_at":"2014-01-01T09:00:00Z"}"""))
 
     def runOnce(): Unit = {
-      val q = Ingest.runReposStream(spark, s"$dir/repos", wh, ckpt)
+      val q = Ingest.runStream(spark, "repos", s"$dir/repos", wh, ckpt)
       q.processAllAvailable(); q.stop()
     }
     runOnce()
@@ -205,8 +205,8 @@ class IngestSpec extends AnyFunSuite {
     def run(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
       q.processAllAvailable(); q.stop()
     }
-    run(Ingest.runUsersStream(spark, s"$dir/users", wh, s"$dir/_ck_u"))
-    run(Ingest.runMembersStream(spark, s"$dir/org_members", wh, s"$dir/_ck_m"))
+    run(Ingest.runStream(spark, "users", s"$dir/users", wh, s"$dir/_ck_u"))
+    run(Ingest.runStream(spark, "org_members", s"$dir/org_members", wh, s"$dir/_ck_m"))
     val first = spark.read.parquet(s"$wh/gh_users_organizations")
       .as[(Long, Long)].collect().toSet
     assert(first == Set((1000001L, 2000003L)) || first == Set((1L, 3L)),
@@ -218,8 +218,8 @@ class IngestSpec extends AnyFunSuite {
       """{"id":2,"login":"bob","type":"User","name":"Bob","email":"b@x.org","created_at":"2013-02-01T00:00:00Z","updated_at":"","followers":0,"following":0,"hireable":false}"""))
     writeDocs(s"$dir/org_members/2014-01-02.bson", Seq(
       """{"id":2,"login":"bob","org":"devmine","type":"User"}"""))
-    run(Ingest.runUsersStream(spark, s"$dir/users", wh, s"$dir/_ck_u"))
-    run(Ingest.runMembersStream(spark, s"$dir/org_members", wh, s"$dir/_ck_m"))
+    run(Ingest.runStream(spark, "users", s"$dir/users", wh, s"$dir/_ck_u"))
+    run(Ingest.runStream(spark, "org_members", s"$dir/org_members", wh, s"$dir/_ck_m"))
     val second = spark.read.parquet(s"$wh/gh_users_organizations")
       .as[(Long, Long)].collect().toSet
     assert(second.size == 2, s"got $second")
@@ -463,7 +463,7 @@ class IngestSpec extends AnyFunSuite {
     DumpSource.writeDump(s"$dir/commits/2014-01-01.bson", Iterator(
       commitDoc("c1", "first copy", "2014-01-01T10:00:00Z")))
     def runOnce(): Unit = {
-      val q = Ingest.runCommitsStream(spark, s"$dir/commits", wh, ckpt)
+      val q = Ingest.runStream(spark, "commits", s"$dir/commits", wh, ckpt)
       q.processAllAvailable(); q.stop()
     }
     runOnce()
@@ -492,7 +492,7 @@ class IngestSpec extends AnyFunSuite {
     DumpSource.writeDump(s"$dir/events/2014-01-02.bson", Iterator(
       eventDoc("e1", "2014-01-01T10:00:00Z"),
       eventDoc("e2", "2014-01-02T10:00:00Z")))
-    val q = Ingest.runEventsStream(spark, s"$dir/events", wh, s"$dir/_cke")
+    val q = Ingest.runStream(spark, "events", s"$dir/events", wh, s"$dir/_cke")
     q.processAllAvailable(); q.stop()
     val evs = spark.read.parquet(s"$wh/events")
       .select($"event_id").as[String].collect().sorted.toSeq
@@ -691,7 +691,7 @@ class IngestSpec extends AnyFunSuite {
         "created_at" -> "2014-01-01T00:00:00Z",
         "updated_at" -> updated, "closed_at" -> ""))
     def runIssues(): Unit = {
-      val q = Ingest.runIssuesStream(spark, s"$dir/issues", wh, s"$dir/_cki")
+      val q = Ingest.runStream(spark, "issues", s"$dir/issues", wh, s"$dir/_cki")
       q.processAllAvailable(); q.stop()
     }
     DumpSource.writeDump(s"$dir/issues/2014-01-02.bson", Iterator(
@@ -729,7 +729,7 @@ class IngestSpec extends AnyFunSuite {
         "created_at" -> "2014-01-01T00:00:00Z",
         "updated_at" -> updated, "merged_at" -> "", "closed_at" -> ""))
     def runPrs(): Unit = {
-      val q = Ingest.runPullRequestsStream(spark, s"$dir/pull_requests",
+      val q = Ingest.runStream(spark, "pull_requests", s"$dir/pull_requests",
         wh, s"$dir/_ckp")
       q.processAllAvailable(); q.stop()
     }
@@ -757,7 +757,7 @@ class IngestSpec extends AnyFunSuite {
         "user" -> Seq("id" -> 1L, "login" -> "alice"),
         "created_at" -> "2014-01-01T00:00:00Z", "updated_at" -> updated))
     def runComments(folder: String, ck: String): Unit = {
-      val q = Ingest.runCommentsStream(spark, s"$dir/$folder", wh, ck)
+      val q = Ingest.runStream(spark, folder, s"$dir/$folder", wh, ck)
       q.processAllAvailable(); q.stop()
     }
     // same id through BOTH kind streams into the ONE comments table:
@@ -782,7 +782,7 @@ class IngestSpec extends AnyFunSuite {
     assert(got == Seq(("commit", "commit edited"), ("issue", "issue side")),
       s"got $got")
     intercept[IllegalArgumentException] {
-      Ingest.runCommentsStream(spark, s"$dir/watchers", wh, s"$dir/_ckx")
+      Ingest.runStream(spark, "comments", s"$dir/watchers", wh, s"$dir/_ckx")
     }
 
     // watchers: a LATER batch ships an EARLIER star -> replaces
@@ -790,7 +790,7 @@ class IngestSpec extends AnyFunSuite {
       Bson.docBody(Seq("id" -> 1L, "login" -> "alice", "repo" -> "ght2dm",
         "owner" -> "devmine", "created_at" -> at))
     def runWatchers(): Unit = {
-      val q = Ingest.runWatchersStream(spark, s"$dir/watchers", wh,
+      val q = Ingest.runStream(spark, "watchers", s"$dir/watchers", wh,
         s"$dir/_ckw")
       q.processAllAvailable(); q.stop()
     }
@@ -812,7 +812,7 @@ class IngestSpec extends AnyFunSuite {
         "parent" -> Seq("id" -> 100L, "full_name" -> "devmine/ght2dm"),
         "created_at" -> at))
     def runForks(): Unit = {
-      val q = Ingest.runForksStream(spark, s"$dir/forks", wh, s"$dir/_ckf")
+      val q = Ingest.runStream(spark, "forks", s"$dir/forks", wh, s"$dir/_ckf")
       q.processAllAvailable(); q.stop()
     }
     DumpSource.writeDump(s"$dir/forks/2014-01-02.bson",
@@ -992,11 +992,11 @@ class IngestSpec extends AnyFunSuite {
         "default" -> true, "repo" -> "ght2dm", "owner" -> "devmine"))
     DumpSource.writeDump(s"$dir/repo_labels/2014-01-01.bson",
       Iterator(labelDoc("red")))
-    drain(Ingest.runRepoLabelsStream(spark, s"$dir/repo_labels", wh,
+    drain(Ingest.runStream(spark, "repo_labels", s"$dir/repo_labels", wh,
       s"$dir/_ckl"))
     DumpSource.writeDump(s"$dir/repo_labels/2014-01-02.bson",
       Iterator(labelDoc("blue")))
-    drain(Ingest.runRepoLabelsStream(spark, s"$dir/repo_labels", wh,
+    drain(Ingest.runStream(spark, "repo_labels", s"$dir/repo_labels", wh,
       s"$dir/_ckl"))
     val color = spark.read.parquet(s"$wh/repo_labels")
       .select($"color").as[String].collect().toSeq
@@ -1009,11 +1009,11 @@ class IngestSpec extends AnyFunSuite {
         "city" -> "Paris", "status" -> "OK", "updated_at" -> updated))
     DumpSource.writeDump(s"$dir/geo_locations/2014-01-01.bson",
       Iterator(geoDoc(48.86, "2014-01-02T00:00:00Z")))
-    drain(Ingest.runGeoLocationsStream(spark, s"$dir/geo_locations", wh,
+    drain(Ingest.runStream(spark, "geo_locations", s"$dir/geo_locations", wh,
       s"$dir/_ckg"))
     DumpSource.writeDump(s"$dir/geo_locations/2014-01-02.bson",
       Iterator(geoDoc(48.00, "2014-01-01T00:00:00Z"))) // stale replay
-    drain(Ingest.runGeoLocationsStream(spark, s"$dir/geo_locations", wh,
+    drain(Ingest.runStream(spark, "geo_locations", s"$dir/geo_locations", wh,
       s"$dir/_ckg"))
     val lat = spark.read.parquet(s"$wh/geo_locations")
       .select($"lat").as[Double].collect().toSeq
@@ -1025,11 +1025,11 @@ class IngestSpec extends AnyFunSuite {
         "created_at" -> at))
     DumpSource.writeDump(s"$dir/followers/2014-01-02.bson",
       Iterator(followDoc("2014-01-02T08:00:00Z")))
-    drain(Ingest.runFollowersStream(spark, s"$dir/followers", wh,
+    drain(Ingest.runStream(spark, "followers", s"$dir/followers", wh,
       s"$dir/_ckfo"))
     DumpSource.writeDump(s"$dir/followers/2014-01-03.bson",
       Iterator(followDoc("2014-01-01T08:00:00Z")))
-    drain(Ingest.runFollowersStream(spark, s"$dir/followers", wh,
+    drain(Ingest.runStream(spark, "followers", s"$dir/followers", wh,
       s"$dir/_ckfo"))
     val fat = spark.read.parquet(s"$wh/followers")
       .select($"followed_at".cast("string")).as[String].collect().toSeq
@@ -1043,11 +1043,11 @@ class IngestSpec extends AnyFunSuite {
         "created_at" -> "2014-01-01T08:00:00Z"))
     DumpSource.writeDump(s"$dir/issue_events/2014-01-01.bson",
       Iterator(ievDoc(1L)))
-    drain(Ingest.runIssueEventsStream(spark, s"$dir/issue_events", wh,
+    drain(Ingest.runStream(spark, "issue_events", s"$dir/issue_events", wh,
       s"$dir/_ckie"))
     DumpSource.writeDump(s"$dir/issue_events/2014-01-02.bson",
       Iterator(ievDoc(1L), ievDoc(2L)))
-    drain(Ingest.runIssueEventsStream(spark, s"$dir/issue_events", wh,
+    drain(Ingest.runStream(spark, "issue_events", s"$dir/issue_events", wh,
       s"$dir/_ckie"))
     val ids = spark.read.parquet(s"$wh/issue_events")
       .select($"event_github_id").as[Long].collect().sorted.toSeq
@@ -1062,11 +1062,11 @@ class IngestSpec extends AnyFunSuite {
             "date" -> "2014-01-01T07:00:00Z"))))
     DumpSource.writeDump(s"$dir/pull_request_commits/2014-01-01.bson",
       Iterator(prcDoc(1L)))
-    drain(Ingest.runPullRequestCommitsStream(spark,
+    drain(Ingest.runStream(spark, "pull_request_commits",
       s"$dir/pull_request_commits", wh, s"$dir/_ckpc"))
     DumpSource.writeDump(s"$dir/pull_request_commits/2014-01-02.bson",
       Iterator(prcDoc(1L), prcDoc(2L)))
-    drain(Ingest.runPullRequestCommitsStream(spark,
+    drain(Ingest.runStream(spark, "pull_request_commits",
       s"$dir/pull_request_commits", wh, s"$dir/_ckpc"))
     val pairs = spark.read.parquet(s"$wh/pull_request_commits")
       .select($"pr_id", $"sha").as[(Long, String)]
@@ -1121,6 +1121,28 @@ class IngestSpec extends AnyFunSuite {
     assert(!touched, "fatal paths must not build a session")
     assert(errs.exists(_.startsWith("usage:")) &&
       errs.exists(_.contains("cannot read config")), s"errs=$errs")
+  }
+
+  test("the ght2dm CLI's verbose row counts read a versioned warehouse " +
+    "through its generations: every run exits 0") {
+    val dir = Files.createTempDirectory(
+      Paths.get("target"), "ingest_vcli").toAbsolutePath.toString
+    Files.createDirectories(Paths.get(s"$dir/users"))
+    writeDocs(s"$dir/users/2014-01-01.bson", Seq(
+      """{"id":1,"login":"alice","type":"User","name":"Alice","email":"a@x.org","created_at":"2013-01-01T00:00:00Z","updated_at":"","followers":1,"following":1,"hireable":true}"""))
+    val cfgPath = s"$dir/graft.conf"
+    Files.writeString(Paths.get(cfgPath),
+      s"""{"ghtorrent_folders": ["$dir/users"], "warehouse_dir": "$dir/wh",
+         | "versioned_warehouse": true}""".stripMargin)
+    (1 to 2).foreach { run =>
+      val printed = collection.mutable.Buffer.empty[String]
+      val errs = collection.mutable.Buffer.empty[String]
+      val status = Ght2dm.runCli(Array("-v", cfgPath), printed += _,
+        errs += _, _ => spark)
+      assert(status == 0 && errs.isEmpty, s"run $run: errs=$errs")
+      assert(printed.exists(_.startsWith("[users] 1 rows")),
+        s"run $run: got $printed")
+    }
   }
 
   test("snapshot-isolated generations: a reader that resolved before a " +
@@ -1222,7 +1244,7 @@ class IngestSpec extends AnyFunSuite {
             "date" -> date)),
         "parents" -> Bson.BArray(Nil)))
     def runOnce(): Unit = {
-      val q = Ingest.runCommitsStream(spark, s"$dir/commits", wh, ckpt)
+      val q = Ingest.runStream(spark, "commits", s"$dir/commits", wh, ckpt)
       q.processAllAvailable(); q.stop()
     }
     DumpSource.writeDump(s"$dir/commits/2014-01-01.bson", Iterator(
@@ -1253,6 +1275,41 @@ class IngestSpec extends AnyFunSuite {
       s"unexpected root entries: $entries")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$wh/commits.__tmp")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$wh/commits.__old")))
+  }
+
+  test("the repos stream onto VERSIONED roots reads its existing tables " +
+    "through the generation layout: ids continue, no swap artifacts") {
+    import graft.sources.Warehouse
+    val dir = Files.createTempDirectory(
+      Paths.get("target"), "ingest_vrepos").toAbsolutePath.toString
+    Files.createDirectories(Paths.get(s"$dir/repos"))
+    val wh = s"$dir/warehouse"; val ckpt = s"$dir/_ckpt"
+    val roots = Seq(s"$wh/repositories", s"$wh/gh_repositories")
+    roots.foreach(Warehouse.initVersioned(spark, _)) // declared ONCE
+    def runOnce(): Unit = {
+      val q = Ingest.runStream(spark, "repos", s"$dir/repos", wh, ckpt)
+      q.processAllAvailable(); q.stop()
+    }
+    writeDocs(s"$dir/repos/2014-01-01.bson", Seq(
+      """{"id":100,"name":"ght2dm","full_name":"devmine/ght2dm","language":"Go","clone_url":"https://github.example/devmine/ght2dm.git","owner":{"login":"devmine"},"fork":false,"forks_count":1,"open_issues_count":5,"stargazers_count":10,"subscribers_count":2,"watchers_count":10,"size_in_kb":512,"created_at":"2014-01-01T00:00:00Z","updated_at":"2014-01-01T10:00:00Z","pushed_at":"2014-01-01T09:00:00Z"}"""))
+    runOnce()
+    // day 2: a re-ship of repo 100 + a new repo
+    writeDocs(s"$dir/repos/2014-01-02.bson", Seq(
+      """{"id":100,"name":"ght2dm","full_name":"devmine/ght2dm","language":"Go","clone_url":"https://github.example/devmine/ght2dm.git","owner":{"login":"devmine"},"fork":false,"forks_count":2,"open_issues_count":3,"stargazers_count":12,"subscribers_count":2,"watchers_count":12,"size_in_kb":600,"created_at":"2014-01-01T00:00:00Z","updated_at":"2014-01-02T10:00:00Z","pushed_at":"2014-01-02T09:00:00Z"}""",
+      """{"id":200,"name":"repo2","full_name":"alice/repo2","language":"Rust","clone_url":"https://github.example/alice/repo2.git","owner":{"login":"alice"},"fork":false,"forks_count":0,"open_issues_count":0,"stargazers_count":1,"subscribers_count":1,"watchers_count":1,"size_in_kb":64,"created_at":"2014-01-02T00:00:00Z","updated_at":"2014-01-02T00:00:00Z","pushed_at":"2014-01-02T00:00:00Z"}"""))
+    runOnce()
+    val got = Warehouse.readAuto(spark, s"$wh/repositories")
+      .select($"id", $"name").as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((1L, "ght2dm"), (2L, "repo2")), s"got $got")
+    assert(Warehouse.readAuto(spark, s"$wh/gh_repositories").count() == 2)
+    val fs = new org.apache.hadoop.fs.Path(wh)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    roots.foreach { root =>
+      val entries = fs.listStatus(new org.apache.hadoop.fs.Path(root))
+        .map(_.getPath.getName).toSet
+      assert(entries.forall(n => n.startsWith("gen-") || n == "_gen"),
+        s"unexpected entries under $root: $entries")
+    }
   }
 
   test("pin-one-generation reads: resolveAuto + readAt hold a multi-scan " +
