@@ -39,22 +39,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val (loadBefore, uptimeBefore) = loadEvidence()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // 114 queries x ~10 codegen units thrash the default 100-entry
-      // generated-class cache: measured 1708 janino compiles (vs 1225
-      // distinct units) and ~260 s extra aggregate JIT work across one
-      // grouped pass. Size the cache to hold the whole workload.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // untimed warm-up: session/codegen infra + file-index init, so the
     // alphabetically-first query doesn't absorb one-time session cost
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -202,6 +188,11 @@ object Bench {
       case (_, v) if v >= 0 => v
     }.sum + ccLabelsSec
     val coldTotal = cold.values.sum
+    // process CPU seconds behind seq_total (same query set), so the
+    // compact line carries wall and CPU side by side
+    val cpuTotal = math.rint(cpuSec.collect {
+      case (n, v) if !counterExamples(n) => v
+    }.sum * 1000) / 1000
     // "value" is the SEQUENTIAL per-query total (sum of pass-1 warm
     // minimums) — the apples-to-apples headline against BASELINE.md and
     // prior rounds. The 12-way grouped-pass makespan is informative but
@@ -235,7 +226,7 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench] sidecar write failed: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":$seqTotal,"unit":"sec","parallelism":$parallelism,"n_queries":${timings.size},"queries_file":"target/bench_full.json","failed":$fs,"counterexamples":$ces,"seq_total":$seqTotal,"seq_total_all":$seqTotalAll,"cc_labels_sec":$ccLabelsSec,"cc_labels_runs":$ccRuns,"grouped_total":$groupedTotal,"grouped_runs":${groupedRuns.mkString("[", ",", "]")},"cold_total":$coldTotal,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"loadavg_max":$maxLoad,"load_warning":$loadWarning,"uptime_before":$uptimeBefore,"uptime_after":$uptimeAfter,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$seqTotal,"unit":"sec","parallelism":$parallelism,"n_queries":${timings.size},"queries_file":"target/bench_full.json","cpu_total":$cpuTotal,"failed":$fs,"counterexamples":$ces,"seq_total":$seqTotal,"seq_total_all":$seqTotalAll,"cc_labels_sec":$ccLabelsSec,"cc_labels_runs":$ccRuns,"grouped_total":$groupedTotal,"grouped_runs":${groupedRuns.mkString("[", ",", "]")},"cold_total":$coldTotal,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"loadavg_max":$maxLoad,"load_warning":$loadWarning,"uptime_before":$uptimeBefore,"uptime_after":$uptimeAfter,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -79,11 +79,8 @@ object Ght2dm {
   def main(args: Array[String]): Unit = {
     var started: Option[SparkSession] = None
     val status = runCli(args, println, System.err.println, _ => {
-      val s = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.ui.enabled", "false")
+      val s = Session.builder(
+          sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"), Session.cores)
         .appName("ght2dm").getOrCreate()
       started = Some(s); s
     })

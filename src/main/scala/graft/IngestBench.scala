@@ -2,8 +2,6 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.DumpSource
 
 /** Ingestion-throughput benchmark against the reference's profile.
@@ -27,14 +25,7 @@ object IngestBench {
     val nDocs = args.headOption.map(_.toInt).getOrElse(500000)
     val nFiles = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val indexEvery = args.drop(2).headOption.map(_.toInt).getOrElse(4096)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val dir = s"/root/repo/target/ingest_bench"
     // wipe stale dump files (and their sidecar indexes) from previous

@@ -2183,9 +2183,6 @@ object SparkEntry {
           srcSite.as("src_site"))
       val links = operators.WebClean.extractLinks(pages, "doc_id", "html",
         baseUrlCol = Some("src_url"), carryCols = Seq("src_site"))
-      val sedges = links
-        .select(col("src_site"), dstSite.as("dst_site"))
-        .where(col("src_site") =!= "" && col("dst_site") =!= "")
       // ONE extraction pass feeds the whole composition: the distinct
       // site-pair frame (bounded by the site graph, not the corpus) is
       // persisted and edges, node names, AND the PageRank input all
@@ -2193,8 +2190,16 @@ object SparkEntry {
       // every consumer (edges, names, the rank join-back): measured 5
       // extraction passes and a 3× wall regression. Retained cache,
       // like the iterative results (metadata-sized: distinct pairs).
-      val pairs = sedges.distinct()
+      // The empty-site filter sits ABOVE the cache: below it, Catalyst
+      // pushes it into the extraction stage and inlines the whole
+      // resolveUrl chain into the filter once per urlHost reference;
+      // that code exceeds janino's 64 KB method limit, and Spark runs
+      // the stage without whole-stage codegen.
+      val pairs = links
+        .select(col("src_site"), dstSite.as("dst_site"))
+        .distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .where(col("src_site") =!= "" && col("dst_site") =!= "")
       val edges = pairs.select(
         HashExpressions.fnv64(col("src_site")).as("src"),
         HashExpressions.fnv64(col("dst_site")).as("dst"))

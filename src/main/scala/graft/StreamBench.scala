@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming-throughput benchmark — the sustained-rate evidence for
@@ -26,15 +25,7 @@ object StreamBench {
     val nDocs = args.headOption.map(_.toInt).getOrElse(10000000)
     val nEvents = args.drop(1).headOption.map(_.toInt).getOrElse(10000000)
     val nFiles = args.drop(2).headOption.map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val dir = "/root/repo/target/stream_bench"
     def clean(p: String): Unit = {

@@ -22,25 +22,11 @@ object Verify {
     * cannot kill the test JVM). Returns the number of failed queries
     * plus failed oracle entries. */
   def run(sfDir: String, outDir: String, only: Set[String]): Int = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // getOrCreate reuses a live session (the spec path); only stop a
     // session this run actually created
     val preExisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).exists(!_.sparkContext.isStopped)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // 114 queries x ~10 codegen units thrash the default 100-entry
-      // generated-class cache: measured 1708 janino compiles (vs 1225
-      // distinct units) and ~260 s extra aggregate JIT work across one
-      // grouped pass. Size the cache to hold the whole workload.
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     var failedQueries = List.empty[(String, String)]
     SparkEntry.queries

@@ -93,12 +93,13 @@ object Dedup {
     // use and force a lineage recompute every round
     var liveRdds: List[org.apache.spark.rdd.RDD[_]] = Nil
     // (truncated frame, Some(sum of comp) or None for an empty frame,
-    // row count — the caller sizes the loop width from the counts)
+    // count of non-null comps — the caller sizes the loop width from
+    // the counts, so both branches count the same rows)
     def truncateWithSum(df: DataFrame): (DataFrame, Option[Long], Long) =
       if (checkpointDir.isDefined || !longIds) {
         val t = if (checkpointDir.isDefined) df.checkpoint(eager = true)
                 else df.localCheckpoint(true)
-        val r = t.agg(sum(col("comp")), count(lit(1))).head()
+        val r = t.agg(sum(col("comp")), count(col("comp"))).head()
         (t, Option(r.get(0)).map(_.asInstanceOf[Number].longValue()),
           r.getLong(1))
       } else {

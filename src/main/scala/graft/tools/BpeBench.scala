@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures BPE merge learning at a real vocabulary size:
@@ -16,14 +15,7 @@ object BpeBench {
     val sfDir = args(0)
     val numMerges = args(1).toInt
     val mode = if (args.length > 2) args(2) else "256"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     // the synthetic documents tables carry a ~31-word ASCII vocabulary
     // (every salted token is non-ASCII-filtered), which exhausts BPE
     // after <100 merges — far below a real tokenizer's input. sfDir

@@ -1,32 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Bulk plan capture for the optimization rounds:
   * `runMain graft.tools.ExplainAll <outDir> <suffix> <q1,q2,...|all>`
   * writes `<outDir>/<query>_<suffix>.txt` with the formatted physical
   * plan of each named query — the `plans/rNN/` before/after artifacts
-  * the optimization deliverable commits. Same session config as Bench
-  * so the captured plan is the benched plan. */
+  * the optimization deliverable commits. [[graft.Session]] builds the
+  * session, as it does Bench's, so the captured plan is the benched
+  * plan. */
 object ExplainAll {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names: Seq[String] =
       if (args(2) == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derive an N×-scaled copy of a driver testdata directory for scale-up
@@ -41,14 +41,7 @@ object MakeScale {
     val src = args(0)
     val out = args(1)
     val factor = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def copies(base: DataFrame)(tf: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until factor).map(i => tf(base, i)).reduce(_ unionAll _)

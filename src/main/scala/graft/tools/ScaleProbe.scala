@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -18,15 +17,7 @@ object ScaleProbe {
     val sfDir = args(0)
     val bitsList = args.drop(1).headOption.map(_.split(",").map(_.toInt).toSeq)
       .getOrElse(Seq(7))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val emb = graft.Tables.embeddings(spark, sfDir).select(col("vec_id"),
       col("embedding").cast("array<double>").as("embedding"))

@@ -44,21 +44,11 @@ object ClusterProbe {
   }
 
   def clusterSession(): SparkSession =
-    clusterConfigs.foldLeft(
-      SparkSession.builder()
-        .master("local-cluster[2,2,2048]")
-        .appName("graft-local-cluster")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")) {
-      case (b, (k, v)) => b.config(k, v)
-    }.getOrCreate()
+    Session.builder("local-cluster[2,2,2048]", 8)
+      .appName("graft-local-cluster").config(clusterConfigs).getOrCreate()
 
   def main(args: Array[String]): Unit = {
     val spark = clusterSession()
-    spark.sparkContext.setLogLevel("WARN")
     try {
       // 1. plain distributed job across the 2 executor processes
       val n = spark.range(0, 1000, 1, 8).selectExpr("sum(id)").collect()(0).getLong(0)

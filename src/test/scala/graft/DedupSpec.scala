@@ -300,6 +300,38 @@ class DedupSpec extends AnyFunSuite {
       (Some(10L), Some(10L)), (Some(11L), Some(10L)), (Some(12L), Some(10L))))
   }
 
+  test("connectedComponents sizes its loop from the same node count on " +
+    "both truncation branches when ids are nullable") {
+    // 3 live ids among 140k null ids: counting the nulls (131,072 rows
+    // per loop task) would size the loop 2 wide instead of 1. The
+    // loop width is the partition count of the rounds' output, read
+    // here with coalescing off so AQE does not hide it.
+    val nodes = spark.range(0L, 140003L, 1L, 4)
+      .select(when(col("id") < 3L, col("id")).as("doc_id"))
+    val edges = Seq((0L, 1L)).toDF("id_a", "id_b")
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-width")
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      def run(ckpt: Option[String]) = {
+        val out = Dedup.connectedComponents(nodes, edges, "doc_id", "id_a",
+          "id_b", checkpointDir = ckpt)
+        (out.rdd.getNumPartitions,
+          out.where(col("doc_id").isNotNull).as[(Long, Long)].collect().toSet)
+      }
+      val (fastWidth, fastLabels) = run(None)
+      val (ckptWidth, ckptLabels) = run(Some(dir.toString))
+      assert(fastLabels == Set((0L, 0L), (1L, 0L), (2L, 2L)))
+      assert(ckptLabels == fastLabels)
+      assert(ckptWidth == fastWidth,
+        s"checkpoint branch loop width $ckptWidth, RDD branch $fastWidth")
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("cdcCuts kernel: ascending cuts, forced final cut, rule matches " +
     "a direct recompute") {
     import org.apache.spark.unsafe.types.UTF8String

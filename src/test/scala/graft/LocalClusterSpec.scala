@@ -124,20 +124,13 @@ class LocalClusterSpec extends AnyFunSuite {
     (thumbs ++ audio ++ frames).sorted.toSeq
   }
 
-  private def builder(master: String) = SparkSession.builder()
-    .master(master)
-    .appName(s"graft-parity-$master")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+  private def builder(master: String) =
+    Session.builder(master, 8).appName(s"graft-parity-$master")
 
   /** Collect each query's full result as an order-insensitive list of
     * row renderings (every oracle-gated query is deterministic up to
     * row order by construction). */
   private def runAll(spark: SparkSession): Map[String, Seq[String]] = {
-    spark.sparkContext.setLogLevel("WARN")
     try {
       names.map { n =>
         n -> SparkEntry.queries(n)(spark, sf).collect().map(_.toString).sorted.toSeq
@@ -151,10 +144,8 @@ class LocalClusterSpec extends AnyFunSuite {
 
     // executor-launch wiring shared with ClusterProbe (one definition;
     // see its scaladoc for what each piece is for)
-    val clusterSession = ClusterProbe.clusterConfigs
-      .foldLeft(builder("local-cluster[2,2,2048]")) {
-        case (b, (k, v)) => b.config(k, v)
-      }.getOrCreate()
+    val clusterSession = builder("local-cluster[2,2,2048]")
+      .config(ClusterProbe.clusterConfigs).getOrCreate()
     // prove the topology is what the test claims: 2 executor processes
     // + the driver (a silent fallback to local mode would make the
     // parity check vacuous). Executor JVMs register asynchronously —

@@ -30,6 +30,21 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("q_domain_rank runs every stage under whole-stage codegen " +
+    "(no fallback past janino's 64 KB method limit)") {
+    // a session-level setting: WholeStageCodegenExec reads the fallback
+    // flag from its session's conf, not from a thread-local override
+    val key = "spark.sql.codegen.fallback"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try assert(SparkEntry.queries("q_domain_rank")(spark, TestSpark.sf0001)
+      .collect().nonEmpty)
+    finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("narrow projection prunes the parquet scan to selected columns") {
     val plan = physical(
       SparkEntry.queries("q_users_projection")(spark, TestSpark.sf0001))

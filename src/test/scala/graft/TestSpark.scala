@@ -2,23 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for the whole (serially-executed) test JVM. */
+/** One shared session for the whole (serially-executed) test JVM,
+  * under the production session policy ([[Session.builder]]). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the production wiring: custom functions + the as-of join
-      // lowering rule come in through the standard extensions hook
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession =
+    Session.builder("local[8]", 8).appName("graft-test").getOrCreate()
 
   val sf0001 = "/root/testdata/sf0.001"
 }
