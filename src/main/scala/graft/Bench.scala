@@ -81,9 +81,8 @@ object Bench {
     // cost can neither vanish (cached re-samples) nor be triple-counted.
     var ccLabelsSec = 0.0
     var ccLabelsRuns: Seq[Double] = Nil
-    val ccTrio = Set("q_cluster_best", "q_dedup_clusters", "q_neardup_prune")
     SparkEntry.withClusterLabelSharing(spark, sfDir) {
-    if (only.isEmpty || only.exists(ccTrio)) {
+    if (only.isEmpty || only.exists(SparkEntry.ccTrio)) {
       // min-of-2 priming (round-16 verdict item 4): the one-shot prime
       // measured a 7.6-25 s band on identical code (cold-codegen
       // jitter), polluting seq_total both directions across rounds.

@@ -9,7 +9,8 @@ import java.nio.file.{Files, Paths}
   * (e.g. the PSL classpath resource missing from a raw `java -cp
   * classes` launch) — must never zero the round's artifacts. Every
   * query that runs is written; oracle_sql.json is rendered per-entry
-  * from SparkEntry.oracleSqlSafe with failures recorded by name in a
+  * from SparkEntry.oracleSqlSafe (each [[graft.entry.QuerySpec]]'s
+  * oracle thunk under its own `try`) with failures recorded by name in a
   * sibling oracle_failures.json; the process exits non-zero iff
   * anything failed, AFTER writing everything that succeeded. */
 object Verify {
@@ -22,11 +23,13 @@ object Verify {
     * cannot kill the test JVM). Returns the number of failed queries
     * plus failed oracle entries. */
   def run(sfDir: String, outDir: String, only: Set[String]): Int = {
-    // getOrCreate reuses a live session (the spec path); only stop a
-    // session this run actually created
-    val preExisting = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).exists(!_.sparkContext.isStopped)
-    val spark = Session.local()
+    // a live session (the spec path) is used as it is: building through
+    // Session.local() would apply its runtime SQL confs to it (shuffle
+    // width included) for every later user. Only a session this run
+    // created is stopped.
+    val live = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).filter(!_.sparkContext.isStopped)
+    val spark = live.getOrElse(Session.local())
     new java.io.File(outDir).mkdirs()
     var failedQueries = List.empty[(String, String)]
     SparkEntry.queries
@@ -54,9 +57,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // Per-entry rendering: even the oracle-map ACCESS is guarded so a
-    // failure in base-map construction still yields an artifact with
-    // whatever is salvageable plus a named failure record.
+    // Per-entry rendering: even the registry ACCESS is guarded so a
+    // failure while building it still yields an artifact with a named
+    // failure record.
     val entries: Seq[(String, Either[String, String])] =
       try SparkEntry.oracleSqlSafe
       catch { case e: Throwable =>
@@ -78,7 +81,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_failures.json"), failJson)
     bad.foreach { case (k, e) =>
       System.err.println(s"[verify] oracle entry $k failed: $e") }
-    if (!preExisting) spark.stop()
+    if (live.isEmpty) spark.stop()
     failedQueries.size + bad.size
   }
 }

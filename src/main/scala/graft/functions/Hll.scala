@@ -3,7 +3,7 @@ package graft.functions
 /** HyperLogLog register kernel (Flajolet et al. 2007, the plain HLL
   * estimator — deliberately WITHOUT HLL++'s empirical bias tables, so
   * every arithmetic step is replayable in the DuckDB oracle; see the
-  * q_hll_card oracle in SparkEntry).
+  * q_hll_card oracle in graft.entry.CurationQueries).
   *
   * Register layout: `m = 2^p` one-byte registers. For a 64-bit input
   * hash `h`, the bucket is the TOP `p` bits (`h >>> (64-p)`) and the

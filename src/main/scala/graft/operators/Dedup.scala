@@ -461,7 +461,7 @@ object Dedup {
     * expected collisions ≈ n²/2^65, i.e. ~thousands of 8-token spans
     * at 10^12 windows (sub-ppb of the corpus), the standard accepted
     * rate for 64-bit content keys in dedup pipelines (cf. the MinHash
-    * band keys). The oracle replay in SparkEntry partitions on the
+    * band keys). The oracle replay (graft.entry.DedupQueries) partitions on the
     * SAME 64-bit key, so correctness checks replay collisions rather
     * than hide them; pass byHash=false to key on the window strings
     * when exactness matters more than shuffle width. */

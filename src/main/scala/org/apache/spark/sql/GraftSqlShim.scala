@@ -74,7 +74,15 @@ object GraftSqlShim {
     * `spark.conf.set`/restore pattern, whose override leaked into
     * concurrently-planned queries (the round-16 grouped-pass hazard).
     * The clone is a snapshot: session conf changes made during `body`
-    * are not visible inside it. */
+    * are not visible inside it.
+    *
+    * The clone reaches PLANNING-time confs only (what the analyzer,
+    * optimizer and planner read through `SQLConf.get`, e.g.
+    * `spark.sql.shuffle.partitions`, the one key the production caller
+    * `Graph.withShuffleWidth` scopes). Execution-time flags that
+    * physical operators read through `SparkPlan.conf`, such as
+    * `spark.sql.codegen.fallback`, come from the session conf, so an
+    * override of one of them here is silently ignored. */
   def withConfOverride[A](spark: SparkSession, pairs: Map[String, String])
                          (body: => A): A = {
     val base = spark.asInstanceOf[classic.SparkSession].sessionState.conf

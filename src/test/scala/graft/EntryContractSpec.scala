@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.entry.QuerySpec
 
 /** Guards on the driver contract itself. */
 class EntryContractSpec extends AnyFunSuite {
@@ -10,17 +13,34 @@ class EntryContractSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracleSql key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without queries: $missing")
+  // every oracle entry that renders, by name (a Left is a rendering
+  // failure, so it does not count as an oracle)
+  private def oracleKeys: Set[String] =
+    SparkEntry.oracleSqlSafe.collect { case (k, Right(_)) => k }.toSet
+
+  test("every oracle entry names a query") {
+    val missing = SparkEntry.oracleSqlSafe.map(_._1).toSet -- SparkEntry.queries.keySet
+    assert(missing.isEmpty, s"oracle entries without queries: $missing")
+    val failed = SparkEntry.oracleSqlSafe.collect { case (k, Left(e)) => s"$k: $e" }
+    assert(failed.isEmpty, s"oracle entries that do not render: $failed")
   }
 
   test("EVERY query carries a DuckDB oracle — no rows-only entries") {
     // held for the first time in round 6 (the ANN seeding became
     // SQL-replayable); pinned so a future query can't silently ship
     // without its correctness oracle
-    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    val unoracled = SparkEntry.queries.keySet -- oracleKeys
     assert(unoracled.isEmpty, s"queries without an oracle: $unoracled")
+  }
+
+  test("the registry rejects two specs with one name, naming it") {
+    val df = (s: SparkSession, _: String) => s.range(1).toDF()
+    val specs = Seq(QuerySpec("q_a", df, () => "SELECT 1"),
+      QuerySpec("q_b", df, () => "SELECT 2"),
+      QuerySpec("q_a", df, () => "SELECT 3"))
+    val e = intercept[IllegalArgumentException](QuerySpec.index(specs))
+    assert(e.getMessage.contains("duplicate query names: q_a"), e.getMessage)
+    assert(QuerySpec.index(specs.take(2)).keySet == Set("q_a", "q_b"))
   }
 
   test("SURVEY.md §2 cites every registered query — the coverage table " +

@@ -57,4 +57,19 @@ class VerifyRobustnessSpec extends AnyFunSuite {
     val fails = Files.readString(Paths.get(s"$out/oracle_failures.json"))
     assert(!fails.contains("q_url_parse2"))
   }
+
+  test("Verify.run on the live session leaves its runtime confs alone") {
+    // Session.local()'s getOrCreate would apply the builder's runtime
+    // SQL confs (shuffle width = cores) to the live session, retuning
+    // it for every suite that runs after this one
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try {
+      val out = Files.createTempDirectory("verify_conf").toString
+      assert(Verify.run(TestSpark.sf0001, out, Set("q_token_count")) == 0)
+      assert(spark.conf.get(key) == "3")
+      assert(!spark.sparkContext.isStopped)
+    } finally spark.conf.set(key, before)
+  }
 }

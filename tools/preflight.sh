@@ -19,7 +19,7 @@ echo "[preflight] Test/compile..."
 sbt -batch "Test/compile" >/tmp/preflight_compile.log 2>&1 || {
   echo "[preflight] COMPILE FAILED:"; tail -30 /tmp/preflight_compile.log; exit 1; }
 
-echo "[preflight] EntryContractSpec (queries/oracle/SURVEY bijection)..."
+echo "[preflight] EntryContractSpec (QuerySpec registry: query/oracle/SURVEY bijection)..."
 sbt -batch "testOnly graft.EntryContractSpec graft.VerifyRobustnessSpec" \
   >/tmp/preflight_contract.log 2>&1 || {
   echo "[preflight] CONTRACT SPEC FAILED:"
