@@ -24,7 +24,7 @@ object SparkEntry {
     queries("q_latest_wins")(spark, "/root/testdata/sf0.001")
 
   /** Every query, family by family (SURVEY §2). */
-  private[graft] val registry: Seq[QuerySpec] = Seq(
+  private val registry: Seq[QuerySpec] = Seq(
     ReferenceQueries.specs, IngestQueries.specs, DedupQueries.specs,
     VectorQueries.specs, TextQueries.specs, TokenizerQueries.specs,
     WebQueries.specs, MediaQueries.specs, CurationQueries.specs,

@@ -3,7 +3,6 @@ package entry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators._
 
 /** Synthesis and SQL-replay helpers that more than one query family
   * uses (the Spark side plants a fixture, the DuckDB oracle replays

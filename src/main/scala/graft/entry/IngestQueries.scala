@@ -2,7 +2,6 @@ package graft
 package entry
 
 import org.apache.spark.sql.functions._
-import graft.operators._
 import graft.sources.DumpSource
 import Common._
 

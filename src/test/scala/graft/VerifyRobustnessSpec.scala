@@ -61,14 +61,16 @@ class VerifyRobustnessSpec extends AnyFunSuite {
   test("Verify.run on the live session leaves its runtime confs alone") {
     // Session.local()'s getOrCreate would apply the builder's runtime
     // SQL confs (shuffle width = cores) to the live session, retuning
-    // it for every suite that runs after this one
+    // it for every suite that runs after this one; the sentinel differs
+    // from that width whatever the core count
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
-    spark.conf.set(key, "3")
+    val sentinel = (Session.cores + 1).toString
+    spark.conf.set(key, sentinel)
     try {
       val out = Files.createTempDirectory("verify_conf").toString
       assert(Verify.run(TestSpark.sf0001, out, Set("q_token_count")) == 0)
-      assert(spark.conf.get(key) == "3")
+      assert(spark.conf.get(key) == sentinel)
       assert(!spark.sparkContext.isStopped)
     } finally spark.conf.set(key, before)
   }
