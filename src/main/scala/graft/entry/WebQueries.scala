@@ -508,9 +508,10 @@ private[graft] object WebQueries {
     // float sums); a synthetic crawl graph with a ring (connectivity),
     // a skewed 101-hub spine (realistic in-degree hotspots), and a
     // long stride. The count() is a driver-side scalar (metadata-
-    // sized); the 10 iterations are join+agg pairs with per-round
-    // lineage truncation. Top-100 by (rank desc, node) is a
-    // TakeOrderedAndProject — no global sort materialization.
+    // sized); the 10 iterations are co-partitioned RDD rounds (one
+    // shuffle each) chained into ONE job, about 9 jobs in all.
+    // Top-100 by (rank desc, node) is a TakeOrderedAndProject — no
+    // global sort materialization.
     QuerySpec("q_pagerank", (s, dir) =>
       Graph.pageRank(syntheticLinkGraph(s, dir), "src", "dst", iters = 10)
         .orderBy(col("rank_micro").desc, col("node")).limit(100),
@@ -522,8 +523,8 @@ private[graft] object WebQueries {
 
     // §2b-69b: HITS hubs & authorities over the same crawl graph —
     // the complementary signal (hub farms vs canonical pages); two
-    // Long-sum half-steps per round, renormalized by a pure-integer
-    // division with the max attached as a broadcast 1-row frame
+    // Long-sum half-steps per round, each renormalized by a pure-integer
+    // division by its max, folded by the one job that persists it
     QuerySpec("q_hits", (s, dir) =>
       Graph.hits(syntheticLinkGraph(s, dir), "src", "dst", iters = 8)
         .orderBy(col("auth_micro").desc, col("hub_micro").desc, col("node"))

@@ -59,8 +59,9 @@ object Dedup {
       maxIters, checkpointDir, jumps)._1
 
   /** [[connectedComponents]] plus the number of propagation rounds it
-    * took — the scale metric (each round is one barrier at a fixed
-    * ~0.3 s floor locally, more on a cluster): near-dup cliques
+    * took — the scale metric (each round is one barrier, a freshly
+    * planned query of several jobs: ~0.3–0.55 s per round on a 4-core
+    * host in local mode, more on a cluster): near-dup cliques
     * converge in O(1)-ish rounds, and `DedupSpec` pins that a
     * HIGH-DIAMETER path graph stays ~log(n) under the pointer-doubling
     * + label-equivalence accelerations, whatever the id order. */

@@ -1,11 +1,11 @@
 package graft.operators
 
-import scala.reflect.ClassTag
-
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Link-graph analytics over a crawl: PageRank as the canonical
@@ -27,20 +27,23 @@ import org.apache.spark.storage.StorageLevel
   *   - **Fixed iteration count** (the production norm — PageRank is
   *     consumed as a feature, not solved to fixpoint), so the DuckDB
   *     oracle replays it as an unrolled CTE chain.
-  *   - **One shuffle pair per iteration**: join ranks to the
-  *     degree-annotated edge list on `src`, aggregate contributions
-  *     on `dst` (map-side partial agg), left-join back to the node
-  *     set. The edge list is degree-annotated ONCE and persisted.
-  *   - **One JOB per round barrier** ([[materializeFold]]): each
-  *     round's frame is materialized into a persisted InternalRow RDD
-  *     and any scalar the next step needs (HITS' renormalization max)
-  *     is folded over the SAME pass — not a checkpoint job followed
-  *     by a separate aggregate/broadcast job. The rebuilt frame keeps
-  *     the round's output partitioning (`LogicalRDD.fromDataset`, the
-  *     `Dataset.checkpoint` contract), so the next round's join does
-  *     not re-exchange it. Under `checkpointDir` the same pass also
-  *     writes a reliable checkpoint for executor-loss recovery on a
-  *     real cluster.
+  *   - **One shuffle per round, one job per loop.** The loops run
+  *     over RDDs keyed by node id, all under ONE `HashPartitioner`
+  *     sized by [[loopWidth]]. The deduplicated edge list is grouped
+  *     ONCE into per-source adjacency arrays (the array length is the
+  *     out-degree) and persisted with the node set. A round is
+  *     `edges ⋈ ranks` (narrow: both sides co-partitioned), a
+  *     `reduceByKey` on `dst` (the round's one shuffle, combined
+  *     map-side) and `nodes ⟕ contribs` (narrow). Rounds chain
+  *     lazily, so one action runs them all as the stages of one job:
+  *     no per-round query planning and no per-round job. HITS needs
+  *     its renormalization max between half-steps, so each half-step
+  *     is one RDD `aggregate` job that also persists it. Under
+  *     `checkpointDir` every round is reliably checkpointed (a job per
+  *     round) for executor-loss recovery on a real cluster.
+  *   - **ANSI arithmetic.** Sums and the damping product use
+  *     `Math.addExact`/`multiplyExact`: an overflow fails the query, as
+  *     ANSI SQL's `sum` and `*` do, instead of wrapping.
   *   - **Dangling mass evaporates** (nodes with no out-edges absorb
   *     rank but emit none). This is the common simplification in
   *     curation settings where rank is a relative ordering signal;
@@ -48,8 +51,7 @@ import org.apache.spark.storage.StorageLevel
   *     per round without changing the ordering materially.
   *
   * Multi-edges would double-contribute, so the edge list is
-  * deduplicated here; the extra `distinct` shares its hash
-  * partitioning with the out-degree aggregation that follows it.
+  * deduplicated here (a `distinct` whose count sizes the loop width).
   */
 object Graph {
 
@@ -90,32 +92,71 @@ object Graph {
     * so a query planned CONCURRENTLY on the same SparkSession from
     * another thread — e.g. the grouped bench pass, or any multi-tenant
     * session — keeps the session width. The session conf itself is
-    * never mutated. GraphSpec pins the isolation both ways. */
+    * never mutated. ConfOverrideSpec pins the isolation both ways. */
   private[operators] def withShuffleWidth[A](
       spark: org.apache.spark.sql.SparkSession,
       w: Int)(body: => A): A =
     GraftSqlShim.withConfOverride(spark,
       Map("spark.sql.shuffle.partitions" -> w.toString))(body)
 
-  /** One-job round barrier for the iterative loops: materialize `df`
-    * into a persisted (optionally reliably-checkpointed) InternalRow
-    * RDD and fold `seq`/`comb` over the SAME action, so the per-round
-    * cost is one job — not a materialize job plus an aggregate job.
-    * Returns the rebuilt frame (output partitioning/ordering
-    * preserved), the cache handle for later `unpersist`, and the fold
-    * result. The fold only READS primitive columns, so the unsafe-row
-    * buffer reuse inside the scan is safe; the persisted copy is
-    * `_.copy()`-ed exactly as `Dataset.localCheckpoint` does. */
-  private def materializeFold[A: ClassTag](df: DataFrame, zero: A,
-      reliable: Boolean)(seq: (A, InternalRow) => A)(
-      comb: (A, A) => A): (DataFrame, RDD[InternalRow], A) = {
-    val cached = GraftSqlShim.toInternalRowRdd(df).map(_.copy())
+  /** The loops' shared input: the null-free, deduplicated (src, dst)
+    * edge list, persisted as a frame (the caller unpersists it once the
+    * loop's own caches are materialized), its pairs as an RDD, and the
+    * ONE partitioner every keyed RDD of the loop uses — sized by
+    * [[loopWidth]] from the edge count, which doubles as the cache
+    * warm-up. */
+  private def distinctEdges(edges: DataFrame, srcCol: String, dstCol: String)
+      : (DataFrame, RDD[(Long, Long)], HashPartitioner) = {
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+      .distinct().persist()
+    val part = new HashPartitioner(loopWidth(e.sparkSession, e.count()))
+    // primitives are read out of each (reused) row at once
+    val pairs = GraftSqlShim.toInternalRowRdd(e)
+      .map(r => (r.getLong(0), r.getLong(1)))
+    (e, pairs, part)
+  }
+
+  /** Adjacency arrays keyed by the pair's first id, persisted under
+    * `part`: the array length is the key's degree in that direction,
+    * so the degree rides every row without a separate aggregation. */
+  private def adjacency(pairs: RDD[(Long, Long)],
+                        part: HashPartitioner): RDD[(Long, Array[Long])] =
+    pairs.groupByKey(part).mapValues(_.toArray)
       .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Every id appearing at either end of an edge, persisted under
+    * `part` (map-side combined, so duplicates never cross the shuffle). */
+  private def nodeSet(pairs: RDD[(Long, Long)],
+                      part: HashPartitioner): RDD[(Long, Unit)] =
+    pairs.flatMap { case (s, d) => Iterator((s, ()), (d, ())) }
+      .reduceByKey(part, (_, _) => ())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** One propagation step: each key of `adj` sends its value in `from`,
+    * transformed by `share` (given the value and the adjacency size), to
+    * every neighbour, and the arrivals are summed per neighbour. The
+    * join is narrow (both sides co-partitioned); the sum is the step's
+    * one shuffle, combined map-side. Sums are overflow-checked, like an
+    * ANSI SQL `sum`. */
+  private def propagate(adj: RDD[(Long, Array[Long])], from: RDD[(Long, Long)],
+      part: HashPartitioner)(share: (Long, Int) => Long): RDD[(Long, Long)] =
+    adj.join(from, part).flatMap { case (_, (ns, x)) =>
+      val c = share(x, ns.length)
+      ns.iterator.map(n => (n, c))
+    }.reduceByKey(part, (a, b) => Math.addExact(a, b))
+
+  /** Persist `rdd`, reliably checkpoint it when `reliable`, and return
+    * the result of `action` over it — the action both materializes the
+    * cache and (under `reliable`) is followed by the checkpoint write. */
+  private def materialize[T, A](rdd: RDD[T], reliable: Boolean)(
+      action: RDD[T] => A): A = {
+    rdd.persist(StorageLevel.MEMORY_AND_DISK)
     // mark BEFORE the action: the checkpoint job then reads the
     // just-persisted blocks instead of recomputing the round
-    if (reliable) cached.checkpoint()
-    val folded = cached.aggregate(zero)(seq, comb)
-    (GraftSqlShim.materializedFrom(df, cached), cached, folded)
+    if (reliable) rdd.checkpoint()
+    action(rdd)
   }
 
   /** PageRank in integer micro-units. Returns (`node`, `rank_micro`)
@@ -142,54 +183,36 @@ object Graph {
     // base = (1-d)·1.0 in micro-units, exact: 1e6·(den-num) div den
     val baseMicro = microBase * (dampDen - dampNum) / dampDen
 
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().persist()
-    // the loop width derives from the edge count (the largest frame
-    // any round moves); the count doubles as the cache warm-up
-    val w = loopWidth(spark, e.count())
-    // out-degree rides every edge row; annotate once, persist — the
-    // loop below re-reads this frame `iters` times. Pre-partitioned
-    // on the per-round join key so only the (much smaller) rank frame
-    // moves each iteration, not the edge list.
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val ed = e.join(deg, "src").repartition(w, col("src")).persist()
-
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct().repartition(w, col("node")).persist()
-
-    var ranks = nodes.withColumn("rank_micro", lit(microBase))
-    var prev: Option[RDD[InternalRow]] = None
-    withShuffleWidth(spark, w) {
-      for (_ <- 1 to iters) {
-        val contribs = ed.join(ranks, ed("src") === ranks("node"))
-          .select(col("dst"), expr("rank_micro div outdeg").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("in_mass"))
-        val next = nodes.join(contribs, nodes("node") === contribs("dst"), "left")
-          .select(col("node"),
-            (lit(baseMicro) +
-              expr(s"($dampNum * coalesce(in_mass, 0L)) div $dampDen"))
-              .as("rank_micro"))
-        // one materialization barrier (one JOB) per round; the
-        // per-round stages are w-wide (loopWidth), so the local floor
-        // is task-count-proportional to the DATA, not to the default
-        // shuffle width
-        val (truncated, cache, _) =
-          materializeFold(next, 0L, reliable)((m, _) => m + 1L)(_ + _)
+    val (e, pairs, part) = distinctEdges(edges, srcCol, dstCol)
+    val out = adjacency(pairs, part)
+    val nodes = nodeSet(pairs, part)
+    var ranks: RDD[(Long, Long)] = nodes.mapValues(_ => microBase)
+    var prev: Option[RDD[(Long, Long)]] = None
+    for (_ <- 1 to iters) {
+      val inMass = propagate(out, ranks, part)((r, outdeg) => r / outdeg)
+      ranks = nodes.leftOuterJoin(inMass, part).mapValues { case (_, m) =>
+        Math.addExact(baseMicro,
+          Math.multiplyExact(dampNum, m.getOrElse(0L)) / dampDen)
+      }
+      // a reliable round is its own job (the checkpoint write); the
+      // executor-local rounds chain lazily into the one job below
+      if (reliable) {
+        materialize(ranks, reliable = true)(_.count())
         prev.foreach(_.unpersist(false))
-        prev = Some(cache)
-        ranks = truncated
+        prev = Some(ranks)
       }
     }
-    // the final frame is cache/checkpoint-backed (its blocks stay
-    // resident — the retained-cache contract of an iterative result);
-    // its inputs can go
+    // ONE job runs every round: each is a stage reading the previous
+    // round's shuffle. The final ranks stay persisted (the retained-
+    // cache contract of an iterative result); the loop's inputs can go
+    if (prev.isEmpty) materialize(ranks, reliable)(_.count())
     e.unpersist(false)
-    ed.unpersist(false)
+    out.unpersist(false)
     nodes.unpersist(false)
-    ranks
+    val rows = ranks.map { case (n, r) => InternalRow(n, r) }
+    GraftSqlShim.internalCreateDataFrame(spark, rows, StructType(Seq(
+      StructField("node", LongType, nullable = false),
+      StructField("rank_micro", LongType, nullable = true))))
   }
 
   /** HITS (Kleinberg) hubs & authorities in integer micro-units —
@@ -203,15 +226,14 @@ object Graph {
     * renormalizes to ≤ 1e6 by an integer division
     * `x div ceil(max/1e6)` — a pure-integer stand-in for the usual
     * max-normalization that never multiplies (no overflow for any
-    * corpus size: raw sums are bounded by n·1e6, never squared). The
-    * max is folded out of the SAME job that materializes the raw
-    * half-step ([[materializeFold]]) and lands in the scaling
-    * projection as a literal — one job per half-step, no broadcast
-    * exchange, no second pass over the cache.
+    * corpus size: raw sums are bounded by n·1e6, never squared). Each
+    * raw half-step is persisted by the ONE job (an RDD `aggregate`)
+    * that folds its max; the scaled view is a narrow `mapValues` over
+    * that cache.
     *
-    * The edge list is persisted TWICE, pre-partitioned on `src` and
-    * on `dst` — the half-steps alternate join keys, and without both
-    * orientations every half-step re-shuffles the (largest) edge side.
+    * The edge list is persisted TWICE, as adjacency keyed by `src` and
+    * by `dst` — the half-steps alternate join keys, and both
+    * orientations keep every half-step's join narrow.
     *
     * @param checkpointDir reliable-checkpoint directory for
     *   executor-loss recovery on a real cluster (same contract as
@@ -226,68 +248,49 @@ object Graph {
     val spark = edges.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     val reliable = checkpointDir.isDefined
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().persist()
-    // loop width from the edge count (see loopWidth); count warms e
-    val w = loopWidth(spark, e.count())
-    val eBySrc = e.repartition(w, col("src")).persist()
-    val eByDst = e.repartition(w, col("dst")).persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct().repartition(w, col("node")).persist()
+    val (e, pairs, part) = distinctEdges(edges, srcCol, dstCol)
+    val out = adjacency(pairs, part)
+    val in = adjacency(pairs.map(_.swap), part)
+    val nodes = nodeSet(pairs, part)
 
-    // renormalize x -> x div ceil(max/1e6): ONE job materializes the
-    // raw frame into a persisted RDD AND folds its max; the scaled
-    // view is a narrow projection over the same cache with the
-    // divisor as a literal
-    def rescale(raw: DataFrame, c: String): (DataFrame, RDD[InternalRow]) = {
-      val idx = raw.schema.fieldIndex(c)
-      val (t, cache, mx) = materializeFold(raw, Long.MinValue, reliable)(
-        (m, r) => if (r.isNullAt(idx)) m else math.max(m, r.getLong(idx)))(
-        math.max)
+    // one half-step: raw sums over `adj` from `from` for EVERY node,
+    // persisted by the job that folds their max, then renormalized
+    // x -> x div ceil(max/1e6) as a narrow view over the cache
+    def halfStep(adj: RDD[(Long, Array[Long])],
+                 from: RDD[(Long, Long)]): (RDD[(Long, Long)], RDD[(Long, Long)]) = {
+      val raw = nodes.leftOuterJoin(propagate(adj, from, part)((x, _) => x), part)
+        .mapValues(_._2.getOrElse(0L))
+      val mx = materialize(raw, reliable)(
+        _.aggregate(Long.MinValue)((m, kv) => math.max(m, kv._2), math.max))
       val divisor = math.max(1L, (mx + 999999L) / 1000000L)
-      (t.select(col("node"), expr(s"$c div ${divisor}L").as(c)), cache)
+      (raw.mapValues(_ / divisor), raw)
     }
 
-    var hub = nodes.withColumn("hub_micro", lit(1000000L))
-    var auth: DataFrame = null
-    var prev: List[RDD[InternalRow]] = Nil
-    withShuffleWidth(spark, w) {
-      for (_ <- 1 to iters) {
-        val aRaw = nodes.join(
-            eBySrc.join(hub, eBySrc("src") === hub("node"))
-              .groupBy(col("dst")).agg(sum(col("hub_micro")).as("a_raw")),
-            nodes("node") === col("dst"), "left")
-          .select(col("node"), coalesce(col("a_raw"), lit(0L)).as("auth_micro"))
-        val (aScaled, aCache) = rescale(aRaw, "auth_micro")
-        auth = aScaled
-        val hRaw = nodes.join(
-            eByDst.join(auth, eByDst("dst") === auth("node"))
-              .groupBy(col("src")).agg(sum(col("auth_micro")).as("h_raw")),
-            nodes("node") === col("src"), "left")
-          .select(col("node"), coalesce(col("h_raw"), lit(0L)).as("hub_micro"))
-        val (hScaled, hCache) = rescale(hRaw, "hub_micro")
-        hub = hScaled
-        // the PREVIOUS round's caches fed this round's (already
-        // materialized) half-steps; this round's pair must outlive the
-        // loop — the final result projects over them
-        prev.foreach(_.unpersist(false))
-        prev = List(aCache, hCache)
-      }
+    var hub: RDD[(Long, Long)] = nodes.mapValues(_ => 1000000L)
+    var auth: RDD[(Long, Long)] = null
+    var prev: List[RDD[(Long, Long)]] = Nil
+    for (_ <- 1 to iters) {
+      val (a, aCache) = halfStep(out, hub)
+      auth = a
+      val (h, hCache) = halfStep(in, auth)
+      hub = h
+      // the PREVIOUS round's caches fed this round's (already
+      // materialized) half-steps; this round's pair must outlive the
+      // loop — the final result reads them
+      prev.foreach(_.unpersist(false))
+      prev = List(aCache, hCache)
     }
-    // every node appears exactly once in each scaled frame (the raw
-    // half-steps are nodes-left-joins), so the node set needs no
-    // third join; the output reads only the last two cached RDDs
-    val out = auth
-      .join(hub, Seq("node"))
-      .select(col("node"), col("auth_micro"), col("hub_micro"))
     e.unpersist(false)
-    eBySrc.unpersist(false)
-    eByDst.unpersist(false)
+    out.unpersist(false)
+    in.unpersist(false)
     nodes.unpersist(false)
-    out
+    // every node appears exactly once in each scaled RDD, and both
+    // share `part`, so the pairing is a narrow join over the two caches
+    val rows = auth.join(hub, part).map { case (n, (a, h)) => InternalRow(n, a, h) }
+    GraftSqlShim.internalCreateDataFrame(spark, rows, StructType(Seq(
+      StructField("node", LongType, nullable = false),
+      StructField("auth_micro", LongType, nullable = true),
+      StructField("hub_micro", LongType, nullable = true))))
   }
 
   /** Per-node triangle counts + local clustering coefficient — the
@@ -308,7 +311,7 @@ object Graph {
     * Input edges are symmetrized and deduplicated here; self-loops
     * are dropped. The (edge-sized) working caches are released before
     * returning: the per-node result is materialized once
-    * ([[materializeFold]]) and the returned frame reads those blocks
+    * (`localCheckpoint`) and the returned frame reads those blocks
     * — the same retained-cache contract as the iterative results.
     * Returns (node, degree, triangles, clustering). */
   def triangles(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
@@ -353,10 +356,10 @@ object Graph {
         when(col("degree") >= 2,
           (lit(2.0) * col("triangles").cast("double")) /
             (col("degree").cast("double") * (col("degree").cast("double") - 1.0))))
-    // node-sized result; materialize it so the edge-sized und/deg
-    // caches can be dropped instead of accumulating across calls
-    val (res, _, _) =
-      materializeFold(out, 0L, reliable = false)((m, _) => m + 1L)(_ + _)
+    // node-sized result; materialize it (one job, partitioning kept)
+    // so the edge-sized und/deg caches can be dropped instead of
+    // accumulating across calls
+    val res = out.localCheckpoint()
     und.unpersist(false)
     deg.unpersist(false)
     res

@@ -34,7 +34,8 @@ object GraftSqlShim {
     * the lineage-truncation primitive `localCheckpoint` uses
     * internally, exposed so an iterative loop can materialize a round
     * AND fold an aggregate over it in the SAME job (one barrier per
-    * round instead of two). */
+    * round instead of two), or hand an RDD loop's result back as a
+    * frame. */
   def internalCreateDataFrame(spark: SparkSession,
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
@@ -42,21 +43,6 @@ object GraftSqlShim {
 
   def toInternalRowRdd(df: DataFrame): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
-
-  /** Rebuild a DataFrame over an already-computed InternalRow RDD of
-    * `origin`'s rows, PRESERVING the origin's physical output
-    * partitioning and ordering — the `Dataset.checkpoint` contract
-    * (`LogicalRDD.fromDataset`), so an iterative loop that re-joins
-    * the materialized round on the same key pays no extra exchange.
-    * The rdd must hold exactly the rows `origin` computes (e.g.
-    * `toInternalRowRdd(origin).map(_.copy()).persist()`). */
-  def materializedFrom(origin: DataFrame,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
-    val ds = origin.asInstanceOf[classic.Dataset[Row]]
-    classic.Dataset.ofRows(ds.sparkSession,
-      org.apache.spark.sql.execution.LogicalRDD
-        .fromDataset(rdd, ds, isStreaming = false))
-  }
 
   /** The ACTIVE session's name resolver (case-insensitive unless
     * `spark.sql.caseSensitive`) — for parse-time name comparisons that

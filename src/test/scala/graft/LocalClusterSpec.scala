@@ -57,11 +57,12 @@ class LocalClusterSpec extends AnyFunSuite {
     // round 13: unigram Viterbi kernel — the UnigramVocab reference
     // object (transient lazy lookup map) must rebuild per executor JVM
     "q_unigram_external",
-    // round 13: integer-micro-unit graph iteration across executors
+    // integer-micro-unit graph iteration across executors: the
+    // co-partitioned RDD loop (adjacency-array and Math.addExact
+    // closures, one lazily chained job)
     "q_pagerank",
-    // round 14: the fused one-job round barrier (materializeFold —
-    // InternalRow aggregate closure + LogicalRDD.fromDataset rebuild)
-    // with the max-fold rescale path
+    // the same loop with a per-half-step max `aggregate` closure and
+    // the rescale view over its cache
     "q_hits",
     // round 15: the subword fastText model reference object (input/
     // output matrices + transient lazy wordIds map) rebuilt per
