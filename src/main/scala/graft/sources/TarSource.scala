@@ -1,19 +1,14 @@
 package graft.sources
 
 import java.io.{BufferedInputStream, DataInputStream, EOFException, IOException}
-import java.util
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 for POSIX ustar TAR archives — the container of the
   * WebDataset layout (Aizman et al.: tar shards of grouped sample
@@ -48,16 +43,10 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Usage: `spark.read.format("graft.sources.TarDataSource").load(paths*)`.
   */
-class TarDataSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TarSource.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new TarTable(DumpSource.pathsFromProps(properties))
-  override def supportsExternalMetadata(): Boolean = false
-}
+class TarDataSource extends FileDataSource(TarSource)
 
-object TarSource {
+object TarSource extends FileFormat {
+  val name = "tar"
   val schema: StructType = StructType(Seq(
     StructField("path", StringType, nullable = false),
     StructField("entry_offset", LongType, nullable = false),
@@ -221,7 +210,7 @@ object TarSource {
   /** Write `entries` as one deterministic ustar archive (payload
     * padded to 512, two zero trailer blocks). */
   def writeTar(path: String, entries: Iterator[(String, Array[Byte])]): Unit = {
-    val fs = new Path(path).getFileSystem(DumpSource.activeHadoopConf())
+    val fs = new Path(path).getFileSystem(FileSource.activeHadoopConf())
     val out = fs.create(new Path(path), true)
     try {
       val pad = new Array[Byte](BlockSize)
@@ -281,7 +270,7 @@ object TarSource {
   private def writeTarMeta(path: String,
       entries: Iterator[(String, Array[Byte])])(
       emitMeta: (java.io.OutputStream, Array[Byte], String) => String): Unit = {
-    val fs = new Path(path).getFileSystem(DumpSource.activeHadoopConf())
+    val fs = new Path(path).getFileSystem(FileSource.activeHadoopConf())
     val out = fs.create(new Path(path), true)
     try {
       val pad = new Array[Byte](BlockSize)
@@ -296,17 +285,20 @@ object TarSource {
     } finally out.close()
   }
 
-  /** Cut one file into ~`splitBytes` ranges; readers round up to the
-    * 512 grid and validate-resync, so ranges need no index. */
-  def planSplits(path: String, splitBytes: Long,
-                 conf: org.apache.hadoop.conf.Configuration): Seq[TarFilePartition] = {
-    val p = new Path(path)
-    val fileLen = p.getFileSystem(conf).getFileStatus(p).getLen
-    if (splitBytes <= 0 || fileLen <= splitBytes)
-      return Seq(TarFilePartition(path, 0L, Long.MaxValue))
-    (0L until fileLen by splitBytes)
-      .map(off => TarFilePartition(path, off, math.min(off + splitBytes, fileLen)))
-  }
+  /** A streamed WebDataset folder holds `.tar` shards whose names sort
+    * in landing order (the `shard-000000.tar` convention). A landing
+    * shard is the atomic unit: micro-batches read whole files. */
+  def streamsFile(name: String): Boolean = name.endsWith(".tar")
+
+  val orderingContract: String =
+    "a shard sorting lexicographically before already-processed names " +
+      "arrived late (WebDataset shard folders must be append-only in " +
+      "name order)"
+
+  /** Batch splits are the shared byte tiling: the reader rounds a range
+    * up to the 512 grid and validate-resyncs, so ranges need no index. */
+  def reader(split: FileSplit, conf: Configuration): PartitionReader[InternalRow] =
+    new TarPartitionReader(split, conf)
 
   /** WebDataset sample grouping: entries sharing a name-minus-
     * extension-chain key (basename split at its FIRST dot — the
@@ -329,98 +321,17 @@ object TarSource {
   }
 }
 
-class TarTable(paths: Seq[String]) extends Table with SupportsRead {
-  override def name(): String = s"graft_tar(${paths.mkString(",")})"
-  override def schema(): StructType = TarSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val conf = DumpSource.activeHadoopConf()
-    val splitBytes = options.getLong("splitbytes", 64L << 20)
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
-      override def readSchema(): StructType = TarSource.schema
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] =
-        paths.flatMap(p =>
-          TarSource.planSplits(p, splitBytes, conf)
-            .map(sp => sp: InputPartition)).toArray
-      private lazy val readerFactory =
-        new TarReaderFactory(DumpSource.broadcastHadoopConf(conf))
-      override def createReaderFactory(): PartitionReaderFactory = readerFactory
-      override def toMicroBatchStream(checkpointLocation: String)
-          : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-        new TarMicroBatchStream(paths, new SerializableConfiguration(conf),
-          Option(options.get("maxfilespertrigger")).map(_.toInt))
-    }
-  }
-}
-
-/** Streaming twin of the tar ingestion — the WebDataset shard-folder
-  * layout where new `.tar` shards land continuously (the multimodal
-  * analog of the crawl WARC folder): the folder is the unbounded
-  * source, each micro-batch is the newly-arrived shards (one
-  * partition per whole file — a landing shard is the atomic unit;
-  * sub-file splitting stays a batch-read concern), exactly-once via
-  * the checkpointed file-count offset. Reuses the dump stream's
-  * offset/admission machinery ([[DumpMicroBatchStream]] —
-  * `maxFilesPerTrigger` caps catch-up batches, Trigger.AvailableNow
-  * freezes the listing, the append-only guard fails loudly on a shard
-  * sorting before committed ones) with the WebDataset listing rule:
-  * lexicographic name order over `*.tar` (shard names sort — the
-  * `shard-000000.tar` convention). */
-class TarMicroBatchStream(paths: Seq[String],
-    conf: SerializableConfiguration,
-    maxFilesPerTrigger: Option[Int] = None)
-  extends DumpMicroBatchStream(paths, conf, maxFilesPerTrigger) {
-
-  override protected def listFiles(dir: String): Seq[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf.value)
-    fs.listStatus(p).map(_.getPath.toString)
-      .filter(_.endsWith(".tar"))
-      .sortBy(f => new Path(f).getName)
-      .toSeq
-  }
-
-  override protected def partitionFor(path: String): InputPartition =
-    TarFilePartition(path, 0L, Long.MaxValue)
-
-  override protected def readerFactory(): PartitionReaderFactory =
-    new TarReaderFactory(DumpSource.broadcastHadoopConf(conf.value))
-
-  // shards are read in name order, as listed
-  override protected def scanOrder(files: Seq[String]): Seq[String] = files
-
-  override protected def orderingContract: String =
-    "a shard sorting lexicographically before already-processed names " +
-      "arrived late (WebDataset shard folders must be append-only in " +
-      "name order)"
-}
-
-/** One read task: entries of `path` STARTING in [start, end). */
-case class TarFilePartition(path: String, start: Long, end: Long)
-  extends InputPartition
-
-class TarReaderFactory(conf: Broadcast[SerializableConfiguration])
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new TarPartitionReader(partition.asInstanceOf[TarFilePartition], conf)
-}
-
 /** Streams one tar split: rounds the range start up to the 512-byte
   * grid, steps blocks until one validates as a header (checksum +
   * magic), then walks entries until one would START at or past
   * `part.end`. Truncation inside an entry fails loudly; EOF at a
   * block boundary (archives without the optional zero trailer) ends
   * the walk. */
-class TarPartitionReader(part: TarFilePartition,
-    conf: Broadcast[SerializableConfiguration])
+class TarPartitionReader(part: FileSplit, conf: Configuration)
   extends PartitionReader[InternalRow] {
 
   private val fsPath = new Path(part.path)
-  private val fs = fsPath.getFileSystem(conf.value.value)
+  private val fs = fsPath.getFileSystem(conf)
   private val fileLen = fs.getFileStatus(fsPath).getLen
   private val pathUtf8 = UTF8String.fromString(part.path)
   private val limit = math.min(part.end, fileLen)

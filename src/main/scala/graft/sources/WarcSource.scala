@@ -1,18 +1,13 @@
 package graft.sources
 
 import java.io.{BufferedInputStream, DataInputStream, EOFException, IOException}
-import java.util
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 for WARC (Web ARChive, ISO 28500) files — the format
   * web crawls (Common Crawl and friends) ship in, and the raw input of
@@ -47,16 +42,10 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Usage: `spark.read.format("graft.sources.WarcDataSource").load(paths*)`.
   */
-class WarcDataSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    WarcSource.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new WarcTable(DumpSource.pathsFromProps(properties))
-  override def supportsExternalMetadata(): Boolean = false
-}
+class WarcDataSource extends FileDataSource(WarcSource)
 
-object WarcSource {
+object WarcSource extends FileFormat {
+  val name = "warc"
   val schema: StructType = StructType(Seq(
     StructField("path", StringType, nullable = false),
     StructField("record_offset", LongType, nullable = false),
@@ -77,7 +66,7 @@ object WarcSource {
   def writeWarc(path: String, records: Iterator[(String, Array[Byte])],
                 date: String = "2014-01-01T00:00:00Z",
                 warcType: String = "response"): Unit = {
-    val fs = new Path(path).getFileSystem(DumpSource.activeHadoopConf())
+    val fs = new Path(path).getFileSystem(FileSource.activeHadoopConf())
     val out = fs.create(new Path(path), true)
     val ascii = java.nio.charset.StandardCharsets.US_ASCII
     try records.foreach { case (uri, body) =>
@@ -114,7 +103,7 @@ object WarcSource {
     * (WET files ARE WARC files). */
   def writeWet(path: String, records: Iterator[(String, String)],
                date: String = "2014-01-01T00:00:00Z"): Unit = {
-    val fs = new Path(path).getFileSystem(DumpSource.activeHadoopConf())
+    val fs = new Path(path).getFileSystem(FileSource.activeHadoopConf())
     val out = fs.create(new Path(path), true)
     val ascii = java.nio.charset.StandardCharsets.US_ASCII
     try records.foreach { case (uri, text) =>
@@ -141,19 +130,19 @@ object WarcSource {
     } finally out.close()
   }
 
-  /** Cut one file into [start, end) ranges of ~`splitBytes`; ranges
-    * tile the file exactly and need no index — readers resync on the
-    * record magic (plain) or the gzip member magic (.warc.gz). */
-  def planSplits(path: String, splitBytes: Long,
-                 conf: org.apache.hadoop.conf.Configuration): Seq[WarcFilePartition] = {
-    val p = new Path(path)
-    val gz = path.endsWith(".gz")
-    val fileLen = p.getFileSystem(conf).getFileStatus(p).getLen
-    if (splitBytes <= 0 || fileLen <= splitBytes)
-      return Seq(WarcFilePartition(path, 0L, Long.MaxValue, gz))
-    (0L until fileLen by splitBytes)
-      .map(off => WarcFilePartition(path, off, math.min(off + splitBytes, fileLen), gz))
-  }
+  /** A streamed crawl folder (a Common Crawl segment drop) holds
+    * `.warc` / `.warc.gz` shards whose names sort in landing order. */
+  def streamsFile(name: String): Boolean =
+    name.endsWith(".warc") || name.endsWith(".warc.gz")
+
+  val orderingContract: String =
+    "a shard sorting lexicographically before already-processed names " +
+      "arrived late (WARC folders must be append-only in name order)"
+
+  /** `.gz` files hold one gzip member per record; offsets are compressed. */
+  def reader(split: FileSplit, conf: Configuration): PartitionReader[InternalRow] =
+    if (split.path.endsWith(".gz")) new GzWarcPartitionReader(split, conf)
+    else new WarcPartitionReader(split, conf)
 
   /** Parse `Name: value` CRLF lines up to the empty line; returns the
     * lowercased header map and the absolute offset just past the blank
@@ -232,7 +221,7 @@ object WarcSource {
   def writeWarcGz(path: String, records: Iterator[(String, Array[Byte])],
                   date: String = "2014-01-01T00:00:00Z",
                   warcType: String = "response"): Unit = {
-    val fs = new Path(path).getFileSystem(DumpSource.activeHadoopConf())
+    val fs = new Path(path).getFileSystem(FileSource.activeHadoopConf())
     val out = fs.create(new Path(path), true)
     val deflater = new java.util.zip.Deflater(
       java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
@@ -329,97 +318,14 @@ object WarcSource {
   }
 }
 
-class WarcTable(paths: Seq[String]) extends Table with SupportsRead {
-  override def name(): String = s"graft_warc(${paths.mkString(",")})"
-  override def schema(): StructType = WarcSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val conf = DumpSource.activeHadoopConf()
-    val splitBytes = options.getLong("splitbytes", 64L << 20)
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
-      override def readSchema(): StructType = WarcSource.schema
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] =
-        paths.flatMap(p =>
-          WarcSource.planSplits(p, splitBytes, conf)
-            .map(sp => sp: InputPartition)).toArray
-      private lazy val readerFactory =
-        new WarcReaderFactory(DumpSource.broadcastHadoopConf(conf))
-      override def createReaderFactory(): PartitionReaderFactory = readerFactory
-      override def toMicroBatchStream(checkpointLocation: String)
-          : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-        new WarcMicroBatchStream(paths, new SerializableConfiguration(conf),
-          Option(options.get("maxfilespertrigger")).map(_.toInt))
-    }
-  }
-}
-
-/** Streaming twin of the WARC ingestion — the crawl-folder layout
-  * where new `.warc` / `.warc.gz` shards land continuously (a Common
-  * Crawl segment drop): the folder is the unbounded source, each
-  * micro-batch is the newly-arrived shards (one partition per file),
-  * exactly-once via the checkpointed file-count offset. Reuses the
-  * dump stream's offset/admission machinery ([[DumpMicroBatchStream]]
-  * — `maxFilesPerTrigger` caps catch-up batches, Trigger.AvailableNow
-  * freezes the listing, the append-only guard fails loudly on a shard
-  * sorting before committed ones) with the WARC listing rule:
-  * lexicographic name order over `*.warc` / `*.warc.gz` (crawl shard
-  * names sort — the CC segment convention). */
-class WarcMicroBatchStream(paths: Seq[String],
-    conf: SerializableConfiguration,
-    maxFilesPerTrigger: Option[Int] = None)
-  extends DumpMicroBatchStream(paths, conf, maxFilesPerTrigger) {
-
-  override protected def listFiles(dir: String): Seq[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf.value)
-    fs.listStatus(p).map(_.getPath.toString)
-      .filter(f => f.endsWith(".warc") || f.endsWith(".warc.gz"))
-      .sortBy(f => new Path(f).getName)
-      .toSeq
-  }
-
-  override protected def partitionFor(path: String): InputPartition =
-    WarcFilePartition(path, 0L, Long.MaxValue, path.endsWith(".gz"))
-
-  override protected def readerFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(DumpSource.broadcastHadoopConf(conf.value))
-
-  // shards are read in name order, as listed
-  override protected def scanOrder(files: Seq[String]): Seq[String] = files
-
-  override protected def orderingContract: String =
-    "a shard sorting lexicographically before already-processed names " +
-      "arrived late (WARC folders must be append-only in name order)"
-}
-
-/** One read task: records of `path` STARTING in [start, end); `gz`
-  * marks member-per-record gzip files (offsets are compressed). */
-case class WarcFilePartition(path: String, start: Long, end: Long,
-                             gz: Boolean = false)
-  extends InputPartition
-
-class WarcReaderFactory(conf: Broadcast[SerializableConfiguration])
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[WarcFilePartition]
-    if (p.gz) new GzWarcPartitionReader(p, conf)
-    else new WarcPartitionReader(p, conf)
-  }
-}
-
 /** Streams one WARC split: resyncs to the first record start at or
   * after `part.start` (offset 0 needs no scan), then parses records
   * until one would START at or past `part.end`. */
-class WarcPartitionReader(part: WarcFilePartition,
-    conf: Broadcast[SerializableConfiguration])
+class WarcPartitionReader(part: FileSplit, conf: Configuration)
   extends PartitionReader[InternalRow] {
 
   private val fsPath = new Path(part.path)
-  private val fs = fsPath.getFileSystem(conf.value.value)
+  private val fs = fsPath.getFileSystem(conf)
   private val fileLen = fs.getFileStatus(fsPath).getLen
   private val pathUtf8 = UTF8String.fromString(part.path)
 
@@ -554,12 +460,11 @@ class WarcPartitionReader(part: WarcFilePartition,
   * is the member's COMPRESSED offset (the identity Common Crawl
   * indexes publish). One inflated record in memory at a time, CRC and
   * ISIZE verified per member. */
-class GzWarcPartitionReader(part: WarcFilePartition,
-    conf: Broadcast[SerializableConfiguration])
+class GzWarcPartitionReader(part: FileSplit, conf: Configuration)
   extends PartitionReader[InternalRow] {
 
   private val fsPath = new Path(part.path)
-  private val fs = fsPath.getFileSystem(conf.value.value)
+  private val fs = fsPath.getFileSystem(conf)
   private val fileLen = fs.getFileStatus(fsPath).getLen
   private val pathUtf8 = UTF8String.fromString(part.path)
   private val limit = math.min(part.end, fileLen)

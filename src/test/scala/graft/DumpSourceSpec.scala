@@ -42,6 +42,18 @@ class DumpSourceSpec extends AnyFunSuite {
     assert(lens.toSeq == Seq(0, 100000))
   }
 
+  test("load(p1, p2) reads paths that contain a comma") {
+    val dir = tmpDir()
+    Files.createDirectories(Paths.get(s"$dir/with,comma"))
+    DumpSource.writeDump(s"$dir/2014-01-01.bson", Iterator("a".getBytes(UTF_8)))
+    DumpSource.writeDump(s"$dir/with,comma/2014-01-02.bson",
+      Iterator("b".getBytes(UTF_8)))
+    val docs = spark.read.format("graft.sources.DumpDataSource")
+      .load(s"$dir/2014-01-01.bson", s"$dir/with,comma/2014-01-02.bson")
+      .select($"doc".cast("string")).as[String].collect().sorted.toSeq
+    assert(docs == Seq("a", "b"))
+  }
+
   test("sidecar-indexed fat file splits into multiple partitions, " +
     "rows byte-identical to the unsplit read") {
     val dir = tmpDir()

@@ -6,12 +6,12 @@ import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{DumpMicroBatchStream, DumpOffset, DumpSource}
+import graft.sources.{DumpMicroBatchStream, DumpOffset, DumpSource, FileFormat, FileMicroBatchStream, TarSource, WarcSource}
 
 /** Failure-path coverage of the continuous-ingestion machinery: the
   * crash-safe warehouse swap, relation batches racing their dimension
   * tables, surrogate-key continuity when a re-shipped repo drifts its
-  * composite key, and the dump source's append-only offset guard.
+  * composite key, and the file sources' append-only offset guard.
   */
 class IngestHardeningSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -161,6 +161,34 @@ class IngestHardeningSpec extends AnyFunSuite {
       stream.planInputPartitions(committed, latest)
     }
     assert(e.getMessage.contains("append-only"))
+  }
+
+  test("every file format's stream fails loudly on a shard sorting " +
+    "before its committed files, quoting that format's contract") {
+    val body = "x".getBytes(UTF_8)
+    Seq[(FileFormat, String, String, String => Unit)](
+      (DumpSource, "2014-01-02.bson", "2014-01-01.bson",
+        p => DumpSource.writeDump(p, Iterator(body))),
+      (WarcSource, "shard-01.warc", "shard-00.warc",
+        p => WarcSource.writeWarc(p, Iterator("http://corpus.local/" -> body))),
+      (TarSource, "shard-01.tar", "shard-00.tar",
+        p => TarSource.writeTar(p, Iterator("0.txt" -> body)))
+    ).foreach { case (format, first, late, write) =>
+      val dir = tmpDir(s"late_${format.name}")
+      write(s"$dir/$first")
+      val stream = new FileMicroBatchStream(format, Seq(dir),
+        new org.apache.spark.util.SerializableConfiguration(
+          spark.sparkContext.hadoopConfiguration))
+      val committed = stream.latestOffset()
+      assert(committed == DumpOffset(1, Some(first)))
+      write(s"$dir/$late")
+      val e = intercept[IllegalStateException] {
+        stream.planInputPartitions(committed, stream.latestOffset())
+      }
+      assert(e.getMessage.startsWith(s"${format.name} folder is not append-only"),
+        e.getMessage)
+      assert(e.getMessage.endsWith(format.orderingContract), e.getMessage)
+    }
   }
 
   test("schema drift tolerance: missing fields parse as null, unknown " +

@@ -222,4 +222,16 @@ class PlanSpec extends AnyFunSuite {
     assert(projLine.trim.startsWith("*("),
       s"custom-expression project fell out of codegen:\n$plan")
   }
+
+  test("ExplainAll.normalize makes two captures of one plan equal") {
+    def capture(): String = spark.range(10).selectExpr("id % 3 as k")
+      .groupBy("k").count().queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    val (a, b) = (capture(), capture())
+    assert(a != b, "two captures should carry different expression ids")
+    assert(tools.ExplainAll.normalize(a) == tools.ExplainAll.normalize(b))
+    assert(tools.ExplainAll.normalize(
+      "f$$Lambda$12/0x00007f00@1a2b MapPartitionsRDD[7] at Foo.scala:42 plan_id=3") ==
+      "f$$Lambda@hex MapPartitionsRDD[n] at Foo.scala:n plan_id=n")
+  }
 }

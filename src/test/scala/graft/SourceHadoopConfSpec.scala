@@ -12,7 +12,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{DumpSource, DumpTable, TarSource, TarTable, WarcSource, WarcTable}
+import graft.sources.{DumpSource, DumpTable, FileTable, TarSource, WarcSource}
 
 /** The local filesystem under its own scheme, so it resolves only
   * through a Hadoop conf that registers it ([[SchemeFs.settings]]).
@@ -60,8 +60,8 @@ class SourceHadoopConfSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val tables: Seq[(String, Seq[String] => Table with SupportsRead)] = Seq(
     "dump" -> (new DumpTable(_)),
-    "warc" -> (new WarcTable(_)),
-    "tar" -> (new TarTable(_)))
+    "warc" -> (new FileTable(WarcSource, _)),
+    "tar" -> (new FileTable(TarSource, _)))
 
   test("batch and micro-batch reader factories serialize to under 8 KiB") {
     val dir = Files.createTempDirectory("factory_size").toString
@@ -79,15 +79,20 @@ class SourceHadoopConfSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  // planning asks once per copy of the scan node; each ask used to
-  // cost a fresh broadcast of the whole conf
+  // planning asks once per copy of the scan node, and a stream once
+  // per micro-batch; each ask used to cost a fresh broadcast of the
+  // whole conf
   test("a batch scan broadcasts its conf once, however often its factory is asked for") {
     val dir = Files.createTempDirectory("factory_once").toString
     tables.foreach { case (kind, table) =>
-      val batch = table(Seq(dir))
-        .newScanBuilder(CaseInsensitiveStringMap.empty()).build().toBatch
+      val scan = table(Seq(dir))
+        .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      val batch = scan.toBatch
       assert(batch.createReaderFactory() eq batch.createReaderFactory(),
         s"$kind batch scan built a second reader factory")
+      val stream = scan.toMicroBatchStream(s"$dir/_ck_$kind")
+      assert(stream.createReaderFactory() eq stream.createReaderFactory(),
+        s"$kind stream built a second reader factory")
     }
   }
 
@@ -97,10 +102,10 @@ class SourceHadoopConfSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dir = SchemeFs.tmpDir("session_scheme")
       DumpSource.writeDump(s"$dir/dump/2014-01-01.bson",
         Iterator("a", "bb", "ccc").map(_.getBytes(UTF_8)))
-      WarcSource.writeWarc(s"$dir/crawl.warc", Iterator(
+      WarcSource.writeWarc(s"$dir/crawl/crawl.warc", Iterator(
         "http://corpus.local/1" -> "one".getBytes(UTF_8),
         "http://corpus.local/2" -> "two".getBytes(UTF_8)))
-      TarSource.writeTar(s"$dir/shard.tar", Iterator(
+      TarSource.writeTar(s"$dir/shards/shard.tar", Iterator(
         "1.txt" -> "x".getBytes(UTF_8), "1.cls" -> "y".getBytes(UTF_8)))
 
       val docs = spark.read.format("graft.sources.DumpDataSource")
@@ -108,26 +113,31 @@ class SourceHadoopConfSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select($"doc".cast("string")).as[String].collect().sorted.toSeq
       assert(docs == Seq("a", "bb", "ccc"))
       val records = spark.read.format("graft.sources.WarcDataSource")
-        .load(s"$dir/crawl.warc")
+        .load(s"$dir/crawl/crawl.warc")
         .select($"target_uri", $"content".cast("string"))
         .as[(String, String)].collect().sorted.toSeq
       assert(records == Seq(
         "http://corpus.local/1" -> "one", "http://corpus.local/2" -> "two"))
       val entries = spark.read.format("graft.sources.TarDataSource")
-        .load(s"$dir/shard.tar")
+        .load(s"$dir/shards/shard.tar")
         .select($"name", $"payload".cast("string"))
         .as[(String, String)].collect().sorted.toSeq
       assert(entries == Seq("1.cls" -> "y", "1.txt" -> "x"))
 
-      // the micro-batch factory ships the same conf
-      val q = spark.readStream.format("graft.sources.DumpDataSource")
-        .load(s"$dir/dump")
-        .select($"doc".cast("string").as("doc"))
-        .writeStream.format("memory").queryName("scheme_fs_dump")
-        .trigger(Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-      assert(spark.table("scheme_fs_dump").as[String].collect().sorted.toSeq ==
-        Seq("a", "bb", "ccc"))
+      // the micro-batch factories ship the same conf
+      def drain(format: String, folder: String, value: String): Seq[String] = {
+        val name = s"scheme_fs_$format"
+        val q = spark.readStream.format(s"graft.sources.${format}DataSource")
+          .load(s"$dir/$folder")
+          .selectExpr(s"cast($value as string) as v")
+          .writeStream.format("memory").queryName(name)
+          .trigger(Trigger.AvailableNow()).start()
+        try q.awaitTermination() finally q.stop()
+        spark.table(name).as[String].collect().sorted.toSeq
+      }
+      assert(drain("Dump", "dump", "doc") == Seq("a", "bb", "ccc"))
+      assert(drain("Warc", "crawl", "content") == Seq("one", "two"))
+      assert(drain("Tar", "shards", "payload") == Seq("x", "y"))
     } finally SchemeFs.settings.foreach { case (k, _) => spark.conf.unset(k) }
   }
 }
