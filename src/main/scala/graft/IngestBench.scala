@@ -27,7 +27,7 @@ object IngestBench {
     val indexEvery = args.drop(2).headOption.map(_.toInt).getOrElse(4096)
     val spark = Session.local()
 
-    val dir = s"/root/repo/target/ingest_bench"
+    val dir = Session.targetDir("ingest_bench")
     // wipe stale dump files (and their sidecar indexes) from previous
     // runs with different nFiles — the reader visits the whole folder,
     // so leftovers silently contaminate both input volume and the

@@ -40,6 +40,12 @@ object Session {
       .config("spark.sql.shuffle.partitions", partitions.toLong)
       .config(settings)
 
+  /** `target/<sub>` under the working directory (the checkout, when
+    * run through sbt or perfbench), as an absolute path: the folder a
+    * main or a query fixture writes its scratch files to. */
+  def targetDir(sub: String): String =
+    java.nio.file.Paths.get("target", sub).toAbsolutePath.toString
+
   /** The `local[cores]` session, shuffle width = cores. */
   def local(): SparkSession = builder(s"local[$cores]", cores).getOrCreate()
 }

@@ -77,7 +77,7 @@ object SparkEntry {
       // between them, which would silently drop a persisted frame and
       // turn "shared" back into 3× recompute. The frame is metadata-
       // sized (two longs per doc), so the write+read-back is cheap.
-      val path = s"/root/repo/target/scratch/cc_labels_${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val path = Session.targetDir(s"scratch/cc_labels_${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
       computeClusterLabels(s, dir).write.mode("overwrite").parquet(path)
       val labels = s.read.parquet(path)
       val prev = clusterLabelCache.putIfAbsent(key, labels)

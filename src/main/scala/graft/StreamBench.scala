@@ -27,7 +27,7 @@ object StreamBench {
     val nFiles = args.drop(2).headOption.map(_.toInt).getOrElse(20)
     val spark = Session.local()
 
-    val dir = "/root/repo/target/stream_bench"
+    val dir = Session.targetDir("stream_bench")
     def clean(p: String): Unit = {
       val f = new java.io.File(p)
       if (f.exists()) {

@@ -25,9 +25,9 @@ private[graft] object Common {
   }
 
   /** Deterministic per-sf scratch dir for dump fixtures (inside the
-    * repo's target dir; never touches the read-only testdata). */
+    * checkout's target dir; never touches the read-only testdata). */
   def dumpDir(dir: String): String =
-    s"/root/repo/target/dumps/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    Session.targetDir(s"dumps/${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
 
   // ---- splitmix64 / Box-Muller replay helpers for the ANN oracles ----
   // DuckDB has no wrapping 64-bit integer arithmetic, so the splitmix64

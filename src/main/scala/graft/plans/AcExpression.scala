@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{AcAutomaton, AhoCorasick}
+import graft.plans.Kernel.{Call, column}
 
 /** One-pass Aho-Corasick scan (`ac_scan`): per-term occurrence counts
   * (array<long>, index-aligned with the automaton's term list) in a
@@ -15,32 +15,13 @@ import graft.functions.{AcAutomaton, AhoCorasick}
   * for large blocklists. The automaton rides as an expression
   * reference object; its tables rebuild lazily per executor JVM. */
 case class AcScan(child: Expression, ac: AcAutomaton)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"ac_scan requires string input, got ${child.dataType}")
-
+    extends UnaryKernel("ac_scan", StringType, ArrayType(LongType, containsNull = false)) {
   override def nullSafeEval(v: Any): Any =
     AhoCorasick.scanCounts(v.asInstanceOf[UTF8String], ac)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("acAutomaton", ac,
-      "graft.functions.AcAutomaton")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.AhoCorasick.scanCounts($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): AcScan =
-    copy(child = newChild)
-
-  override def prettyName: String = "ac_scan"
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.AhoCorasick.scanCounts",
+    reference(ctx, "acAutomaton", ac, "graft.functions.AcAutomaton"))
 }
 
 object AcExpression {
-  def acScan(text: Column, ac: AcAutomaton): Column =
-    GraftSqlShim.column(AcScan(GraftSqlShim.expression(text), ac))
+  def acScan(text: Column, ac: AcAutomaton): Column = column(text)(AcScan(_, ac))
 }

@@ -1,11 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{BooleanType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
+
+import graft.plans.Kernel.{Call, column}
 
 /** Membership probe of a driver-built [[BloomFilter]] against a bigint
   * column — the prefilter half of scalable decontamination (see
@@ -21,25 +22,14 @@ import org.apache.spark.util.sketch.BloomFilter
   * join, so the composed result is exact).
   */
 case class BloomMightContainLong(child: Expression, bloom: BloomFilter)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain requires bigint input, got ${child.dataType}")
-  override def nullSafeEval(v: Any): Any =
-    bloom.mightContainLong(v.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloom", bloom, classOf[BloomFilter].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.mightContainLong($c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BloomMightContainLong =
-    copy(child = newChild)
-  override def prettyName: String = "bloom_might_contain"
+    extends UnaryKernel("bloom_might_contain", LongType, BooleanType) {
+  override def nullSafeEval(v: Any): Any = bloom.mightContainLong(v.asInstanceOf[Long])
+  override def kernel(ctx: CodegenContext) =
+    Call(reference(ctx, "bloom", bloom, classOf[BloomFilter].getName) + ".mightContainLong")
 }
 
 object BloomExpression {
   /** `bloom.mightContainLong(c)` as a codegen Column predicate. */
   def mightContainLong(c: Column, bloom: BloomFilter): Column =
-    GraftSqlShim.column(BloomMightContainLong(GraftSqlShim.expression(c), bloom))
+    column(c)(BloomMightContainLong(_, bloom))
 }

@@ -1,12 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.Kernel.{Call, column}
 
 /** One greedy left-to-right BPE merge pass over a symbol array:
   * `bpe_merge(syms, 'a', 'b')` replaces every non-overlapping adjacent
@@ -16,40 +17,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * drives the LEARN loop with it. Codegen: a single static kernel
   * call, so k chained merges stay one WholeStageCodegen projection. */
 case class BpeMerge(arr: Expression, a: Expression, b: Expression)
-    extends TernaryExpression {
-
+    extends TernaryKernel(BpeMerge.name, (ArrayType(StringType), StringType, StringType),
+      ArrayType(StringType, containsNull = true)) {
   override def first: Expression = arr
   override def second: Expression = a
   override def third: Expression = b
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-
-  override def checkInputDataTypes(): TypeCheckResult = arr.dataType match {
-    case ArrayType(StringType, _)
-        if a.dataType == StringType && b.dataType == StringType =>
-      TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"bpe_merge requires (array<string>, string, string), got " +
-        s"(${arr.dataType}, ${a.dataType}, ${b.dataType})")
-  }
-
   override def nullSafeEval(arrV: Any, aV: Any, bV: Any): Any =
     graft.functions.BpeOps.mergePass(arrV.asInstanceOf[ArrayData],
       aV.asInstanceOf[UTF8String], bV.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y, z) =>
-      s"graft.functions.BpeOps.mergePass($x, $y, $z)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): BpeMerge =
-    copy(arr = newFirst, a = newSecond, b = newThird)
-
-  override def prettyName: String = "bpe_merge"
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.BpeOps.mergePass")
+}
+object BpeMerge extends SqlFunction("bpe_merge") {
+  def build(es: Seq[Expression]) = BpeMerge(es.head, es(1), es(2))
 }
 
 object BpeExpression {
-  def bpeMerge(arr: Column, a: Column, b: Column): Column =
-    GraftSqlShim.column(BpeMerge(GraftSqlShim.expression(arr),
-      GraftSqlShim.expression(a), GraftSqlShim.expression(b)))
+  def bpeMerge(arr: Column, a: Column, b: Column): Column = column(arr, a, b)(BpeMerge(_, _, _))
 }

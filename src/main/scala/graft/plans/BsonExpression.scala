@@ -1,12 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, StructType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{BinaryType, StructType}
 
 import graft.functions.BsonDecoder
+import graft.plans.Kernel.{Call, NullIfNull, column}
 
 /** `from_bson(doc, schema)` — decode a BSON document (full, or the
   * prefix-stripped body [[graft.sources.DumpSource]] emits) into a
@@ -17,39 +17,18 @@ import graft.functions.BsonDecoder
   * mgo/bson unmarshal, ght2dm.go:277-315). Undecodable bytes yield a
   * NULL struct; unknown document fields are skipped (mgo's
   * unmarshal-into-struct behavior). */
-case class FromBson(child: Expression, schema: StructType) extends UnaryExpression {
-  override def dataType: DataType = schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes() = {
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"from_bson requires binary input, got ${child.dataType}")
-  }
-
+case class FromBson(child: Expression, schema: StructType)
+    extends UnaryKernel("from_bson", BinaryType, schema, NullIfNull) {
   // one decoder per expression instance, serialized to executors for
   // interpreted eval and referenced from generated code
   private lazy val decoder = new BsonDecoder(schema)
 
-  override def nullSafeEval(v: Any): Any =
-    decoder.decode(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dec = ctx.addReferenceObj("bsonDecoder", decoder,
-      classOf[BsonDecoder].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $dec.decode($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): FromBson =
-    copy(child = newChild)
-  override def prettyName: String = "from_bson"
+  override def nullSafeEval(v: Any): Any = decoder.decode(v.asInstanceOf[Array[Byte]])
+  override def kernel(ctx: CodegenContext) =
+    Call(reference(ctx, "bsonDecoder", decoder, classOf[BsonDecoder].getName) + ".decode")
 }
 
 object BsonFunctions {
   /** BSON document (binary) → struct column, like `from_json`. */
-  def fromBson(c: Column, schema: StructType): Column =
-    GraftSqlShim.column(FromBson(GraftSqlShim.expression(c), schema))
+  def fromBson(c: Column, schema: StructType): Column = column(c)(FromBson(_, schema))
 }

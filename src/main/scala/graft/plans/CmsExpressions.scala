@@ -1,15 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 import graft.functions.Cms
+import graft.plans.Kernel.{Call, column}
 
 /** Count-min frequency sketches as first-class binary columns — the
   * approximate-COUNT companion to [[HllExpressions]]' distinct
@@ -64,7 +65,11 @@ case class CmsSketchAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): CmsSketchAgg =
     copy(child = newChild)
-  override def prettyName: String = "cms_sketch64"
+  override def prettyName: String = CmsSketchAgg.name
+}
+object CmsSketchAgg extends SqlFunction("cms_sketch64") {
+  def build(es: Seq[Expression]) = CmsSketchAgg(es.head,
+    es.lift(1).fold(4)(intArg(_, "depth")), es.lift(2).fold(2048)(intArg(_, "width")))
 }
 
 /** Union (elementwise counter sum) of already-built sketches; the
@@ -73,57 +78,19 @@ case class CmsUnionAgg(
     child: Expression,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[(Int, Int, Array[Long])]]
-  with UnaryLike[Expression] {
+  extends SketchUnionAgg[(Int, Int, Array[Long])] {
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cms_union expects a sketch (binary) column, got ${child.dataType}")
-
-  override def createAggregationBuffer(): Option[(Int, Int, Array[Long])] = None
-
-  private def mergeInto(buf: Option[(Int, Int, Array[Long])],
-                        d: Int, w: Int, counters: Array[Long])
-      : Option[(Int, Int, Array[Long])] = buf match {
-    case None => Some((d, w, counters.clone()))
-    case Some((d0, w0, c0)) =>
-      require(d0 == d && w0 == w,
-        s"cms_union: geometry mismatch (${d0}x$w0 vs ${d}x$w)")
-      Cms.merge(c0, counters)
-      buf
+  override protected def read(bytes: Array[Byte]): (Int, Int, Array[Long]) = Cms.fromBytes(bytes)
+  override protected def write(sketch: (Int, Int, Array[Long])): Array[Byte] =
+    Cms.toBytes(sketch._3, sketch._1, sketch._2)
+  override protected def copyOf(sketch: (Int, Int, Array[Long])): (Int, Int, Array[Long]) =
+    sketch.copy(_3 = sketch._3.clone())
+  override protected def mergeInto(into: (Int, Int, Array[Long]),
+                                   other: (Int, Int, Array[Long])): Unit = {
+    require(into._1 == other._1 && into._2 == other._2, "cms_union: geometry mismatch " +
+      s"(${into._1}x${into._2} vs ${other._1}x${other._2})")
+    Cms.merge(into._3, other._3)
   }
-
-  override def update(buffer: Option[(Int, Int, Array[Long])],
-                      input: InternalRow): Option[(Int, Int, Array[Long])] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val (d, w, c) = Cms.fromBytes(v.asInstanceOf[Array[Byte]])
-      mergeInto(buffer, d, w, c)
-    }
-  }
-
-  override def merge(buffer: Option[(Int, Int, Array[Long])],
-                     other: Option[(Int, Int, Array[Long])])
-      : Option[(Int, Int, Array[Long])] = other match {
-    case None => buffer
-    case Some((d, w, c)) => mergeInto(buffer, d, w, c)
-  }
-
-  override def eval(buffer: Option[(Int, Int, Array[Long])]): Any =
-    buffer.map { case (d, w, c) => Cms.toBytes(c, d, w) }.orNull
-
-  override def serialize(buffer: Option[(Int, Int, Array[Long])]): Array[Byte] =
-    buffer.map { case (d, w, c) => Cms.toBytes(c, d, w) }
-      .getOrElse(Array.emptyByteArray)
-  override def deserialize(storageFormat: Array[Byte])
-      : Option[(Int, Int, Array[Long])] =
-    if (storageFormat.isEmpty) None
-    else Some(Cms.fromBytes(storageFormat))
 
   override def withNewMutableAggBufferOffset(newOffset: Int): CmsUnionAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -131,46 +98,31 @@ case class CmsUnionAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): CmsUnionAgg =
     copy(child = newChild)
-  override def prettyName: String = "cms_union"
+  override def prettyName: String = CmsUnionAgg.name
+}
+object CmsUnionAgg extends SqlFunction("cms_union") {
+  def build(es: Seq[Expression]) = CmsUnionAgg(es.head)
 }
 
 /** Point frequency estimate of a pre-hashed key against a sketch
   * column (scalar, codegen): min over the d row counters. */
 case class CmsEstimate(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cms_estimate requires (sketch binary, bigint hash), got " +
-        s"(${left.dataType}, ${right.dataType})")
-
+    extends BinaryKernel(CmsEstimate.name, (BinaryType, LongType), LongType) {
   override def nullSafeEval(sk: Any, h: Any): Any =
-    graft.functions.Cms.estimate(sk.asInstanceOf[Array[Byte]],
-      h.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, h) => s"graft.functions.Cms.estimate($s, $h)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CmsEstimate =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "cms_estimate"
+    Cms.estimate(sk.asInstanceOf[Array[Byte]], h.asInstanceOf[Long])
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.Cms.estimate")
+}
+object CmsEstimate extends SqlFunction("cms_estimate") {
+  def build(es: Seq[Expression]) = CmsEstimate(es.head, es(1))
 }
 
 object CmsExpressions {
 
   def cmsSketch64(c: Column, d: Int = 4, w: Int = 2048): Column =
-    GraftSqlShim.column(
-      CmsSketchAgg(GraftSqlShim.expression(c), d, w).toAggregateExpression())
+    column(c)(CmsSketchAgg(_, d, w).toAggregateExpression())
 
-  def cmsUnion(c: Column): Column =
-    GraftSqlShim.column(
-      CmsUnionAgg(GraftSqlShim.expression(c)).toAggregateExpression())
+  def cmsUnion(c: Column): Column = column(c)(CmsUnionAgg(_).toAggregateExpression())
 
   def cmsEstimate(sketch: Column, hash: Column): Column =
-    GraftSqlShim.column(CmsEstimate(GraftSqlShim.expression(sketch),
-      GraftSqlShim.expression(hash)))
+    column(sketch, hash)(CmsEstimate(_, _))
 }

@@ -1,11 +1,14 @@
 package graft.plans
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.FastText.FastTextModel
+import graft.plans.Kernel.{Call, NullIfNull, column}
 
 /** Subword-fastText argmax ([[graft.functions.FastText.argmax]]) as a
   * codegen expression: the whole bilinear inference — tokenize,
@@ -18,59 +21,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * per task. Returns struct(idx INT, logit DOUBLE); null when the
   * text has no feature ids. */
 case class FastTextArgmax(child: Expression,
-                          model: Either[graft.functions.FastText.FastTextModel,
-                                        Broadcast[graft.functions.FastText.FastTextModel]])
-    extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("idx", IntegerType, nullable = false),
-    StructField("logit", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"fasttext_argmax requires string input, got ${child.dataType}")
-  }
+                          model: Either[FastTextModel, Broadcast[FastTextModel]])
+    extends UnaryKernel("fasttext_argmax", StringType, StructType(Seq(
+      StructField("idx", IntegerType, nullable = false),
+      StructField("logit", DoubleType, nullable = false))), NullIfNull) {
   override def nullSafeEval(v: Any): Any =
-    graft.functions.FastText.argmax(v.asInstanceOf[UTF8String],
-      ModelRef.get(model))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val modelCls = classOf[graft.functions.FastText.FastTextModel].getName
-    val modelVar = model match {
-      case Left(m) => ctx.addReferenceObj("model", m, modelCls)
-      case Right(bc) =>
-        val ref = ctx.addReferenceObj("modelBc", bc,
-          classOf[Broadcast[_]].getName)
-        // resolved once per generated-class instance, served from the
-        // executor's broadcast cache after the first task
-        ctx.addMutableState(modelCls, "ftModel",
-          v => s"$v = ($modelCls) $ref.value();")
-    }
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |InternalRow ${ev.value}Tmp = graft.functions.FastText.argmax($c, $modelVar);
-         |if (${ev.value}Tmp == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}Tmp;
-         |}
-       """.stripMargin
-    })
-  }
-  override protected def withNewChildInternal(newChild: Expression): FastTextArgmax =
-    copy(child = newChild)
-  override def prettyName: String = "fasttext_argmax"
+    graft.functions.FastText.argmax(v.asInstanceOf[UTF8String], ModelRef.get(model))
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.FastText.argmax",
+    reference(ctx, "model", model, classOf[FastTextModel].getName))
 }
 
 object FastTextExpressions {
   /** Subword-fastText argmax over a string column. */
-  def fastTextArgmax(c: Column,
-                     model: graft.functions.FastText.FastTextModel): Column = {
+  def fastTextArgmax(c: Column, model: FastTextModel): Column = {
     // dominant payload: the (nwords + bucket) × dim input matrix plus
     // the L × dim output matrix, 8 bytes a cell
     val est = (model.input.length.toLong + model.output.length.toLong) *
       model.dim * 8L
-    GraftSqlShim.column(FastTextArgmax(GraftSqlShim.expression(c),
-      ModelRef.of(model, est)))
+    column(c)(FastTextArgmax(_, ModelRef.of(model, est)))
   }
 }

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SQL-surface registration for the custom expressions, so
   * `spark.sql("SELECT simhash64(text) ...")` works the same as the
@@ -15,8 +14,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (name, info, builder) =>
-      e.injectFunction((FunctionIdentifier(name), info, builder))
+    GraftExtensions.functions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name), f.info, f.build))
     }
     // whole-operator extension: the as-of join logical node's lowering
     e.injectResolutionRule(ResolveAsOfJoin(_))
@@ -27,92 +26,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def intArg(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
-
-  /** (name, info, builder) triples for every custom expression. */
-  val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("zorder64",
-      new ExpressionInfo(classOf[ZOrder64].getName, "zorder64"),
-      (es: Seq[Expression]) => ZOrder64(es.head, es(1))),
-    ("fnv64",
-      new ExpressionInfo(classOf[Fnv64].getName, "fnv64"),
-      (es: Seq[Expression]) => Fnv64(es.head)),
-    ("simhash64",
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (es: Seq[Expression]) => SimHash64(es.head)),
-    ("winnow64",
-      new ExpressionInfo(classOf[Winnow64].getName, "winnow64"),
-      (es: Seq[Expression]) => Winnow64(es.head,
-        if (es.size > 1) intArg(es(1), "winnow64 gram size") else 8)),
-    ("minhash64",
-      new ExpressionInfo(classOf[MinHash64].getName, "minhash64"),
-      (es: Seq[Expression]) => MinHash64(es.head,
-        intArg(es(1), "minhash64 shingle size"),
-        intArg(es(2), "minhash64 signature length"))),
-    ("shingles64",
-      new ExpressionInfo(classOf[Shingles64].getName, "shingles64"),
-      (es: Seq[Expression]) => Shingles64(es.head,
-        intArg(es(1), "shingles64 shingle size"))),
-    ("mix64",
-      new ExpressionInfo(classOf[Mix64].getName, "mix64"),
-      (es: Seq[Expression]) => Mix64(es.head)),
-    ("repratio64",
-      new ExpressionInfo(classOf[RepRatio64].getName, "repratio64"),
-      (es: Seq[Expression]) => RepRatio64(es.head)),
-    ("nfc_normalize",
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (es: Seq[Expression]) => NfcNormalize(es.head)),
-    ("cosine_sim",
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (es: Seq[Expression]) => CosineSim(es.head, es(1))),
-    ("dot_product",
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (es: Seq[Expression]) => DotProduct(es.head, es(1))),
-    ("hll_sketch64",
-      new ExpressionInfo(classOf[HllSketchAgg].getName, "hll_sketch64"),
-      (es: Seq[Expression]) => HllSketchAgg(es.head,
-        if (es.size > 1) intArg(es(1), "hll_sketch64 precision") else 9)),
-    ("hll_union",
-      new ExpressionInfo(classOf[HllUnionAgg].getName, "hll_union"),
-      (es: Seq[Expression]) => HllUnionAgg(es.head,
-        if (es.size > 1) intArg(es(1), "hll_union precision") else 9)),
-    ("hll_estimate",
-      new ExpressionInfo(classOf[HllEstimate].getName, "hll_estimate"),
-      (es: Seq[Expression]) => HllEstimate(es.head)),
-    ("bpe_merge",
-      new ExpressionInfo(classOf[BpeMerge].getName, "bpe_merge"),
-      (es: Seq[Expression]) => BpeMerge(es.head, es(1), es(2))),
-    ("cms_sketch64",
-      new ExpressionInfo(classOf[CmsSketchAgg].getName, "cms_sketch64"),
-      (es: Seq[Expression]) => CmsSketchAgg(es.head,
-        if (es.size > 1) intArg(es(1), "cms_sketch64 depth") else 4,
-        if (es.size > 2) intArg(es(2), "cms_sketch64 width") else 2048)),
-    ("cms_union",
-      new ExpressionInfo(classOf[CmsUnionAgg].getName, "cms_union"),
-      (es: Seq[Expression]) => CmsUnionAgg(es.head)),
-    ("cms_estimate",
-      new ExpressionInfo(classOf[CmsEstimate].getName, "cms_estimate"),
-      (es: Seq[Expression]) => CmsEstimate(es.head, es(1))),
-    ("hist_sketch",
-      new ExpressionInfo(classOf[HistSketchAgg].getName, "hist_sketch"),
-      (es: Seq[Expression]) => HistSketchAgg(es.head)),
-    ("hist_union",
-      new ExpressionInfo(classOf[HistUnionAgg].getName, "hist_union"),
-      (es: Seq[Expression]) => HistUnionAgg(es.head)),
-    ("hist_quantile",
-      new ExpressionInfo(classOf[HistQuantile].getName, "hist_quantile"),
-      (es: Seq[Expression]) => HistQuantile(es.head, es(1))),
-    ("hist_count",
-      new ExpressionInfo(classOf[HistCount].getName, "hist_count"),
-      (es: Seq[Expression]) => HistCount(es.head)))
+  /** Every custom expression callable from SQL; each is its
+    * expression's companion, which holds its name and builder. */
+  val functions: Seq[SqlFunction] = Seq(
+    ZOrder64, Fnv64, SimHash64, Winnow64, MinHash64, Shingles64, Mix64, RepRatio64,
+    NfcNormalize, CosineSim, DotProduct, HllSketchAgg, HllUnionAgg, HllEstimate, BpeMerge,
+    CmsSketchAgg, CmsUnionAgg, CmsEstimate, HistSketchAgg, HistUnionAgg, HistQuantile,
+    HistCount)
 
   /** Register into a live session (local/test path). */
   def register(spark: SparkSession): Unit =
-    functions.foreach { case (name, _, builder) =>
-      org.apache.spark.sql.GraftSqlShim.registerFunction(spark, name, builder)
+    functions.foreach { f =>
+      org.apache.spark.sql.GraftSqlShim.registerFunction(spark, f.name, f.build)
     }
 }

@@ -1,15 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType}
 
 import graft.functions.Hist
+import graft.plans.Kernel.{Call, NullIf, column}
 
 /** Log-bucketed histogram sketches as first-class binary columns — the
   * QUANTILE member of the sketch family ([[HllExpressions]] distinct,
@@ -61,7 +62,10 @@ case class HistSketchAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): HistSketchAgg =
     copy(child = newChild)
-  override def prettyName: String = "hist_sketch"
+  override def prettyName: String = HistSketchAgg.name
+}
+object HistSketchAgg extends SqlFunction("hist_sketch") {
+  def build(es: Seq[Expression]) = HistSketchAgg(es.head)
 }
 
 /** Union (elementwise counter sum) of already-built histogram
@@ -70,46 +74,13 @@ case class HistUnionAgg(
     child: Expression,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[Array[Long]]]
-  with UnaryLike[Expression] {
+  extends SketchUnionAgg[Array[Long]] {
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hist_union expects a sketch (binary) column, got ${child.dataType}")
-
-  override def createAggregationBuffer(): Option[Array[Long]] = None
-
-  private def mergeInto(buf: Option[Array[Long]], counters: Array[Long])
-      : Option[Array[Long]] = buf match {
-    case None => Some(counters.clone())
-    case Some(c0) => Hist.merge(c0, counters); buf
-  }
-
-  override def update(buffer: Option[Array[Long]],
-                      input: InternalRow): Option[Array[Long]] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else mergeInto(buffer, Hist.fromBytes(v.asInstanceOf[Array[Byte]]))
-  }
-
-  override def merge(buffer: Option[Array[Long]],
-                     other: Option[Array[Long]]): Option[Array[Long]] =
-    other match {
-      case None => buffer
-      case Some(c) => mergeInto(buffer, c)
-    }
-
-  override def eval(buffer: Option[Array[Long]]): Any =
-    buffer.map(Hist.toBytes).orNull
-
-  override def serialize(buffer: Option[Array[Long]]): Array[Byte] =
-    buffer.map(Hist.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(storageFormat: Array[Byte]): Option[Array[Long]] =
-    if (storageFormat.isEmpty) None else Some(Hist.fromBytes(storageFormat))
+  override protected def read(bytes: Array[Byte]): Array[Long] = Hist.fromBytes(bytes)
+  override protected def write(sketch: Array[Long]): Array[Byte] = Hist.toBytes(sketch)
+  override protected def copyOf(sketch: Array[Long]): Array[Long] = sketch.clone()
+  override protected def mergeInto(into: Array[Long], other: Array[Long]): Unit =
+    Hist.merge(into, other)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HistUnionAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -117,80 +88,45 @@ case class HistUnionAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): HistUnionAgg =
     copy(child = newChild)
-  override def prettyName: String = "hist_union"
+  override def prettyName: String = HistUnionAgg.name
+}
+object HistUnionAgg extends SqlFunction("hist_union") {
+  def build(es: Seq[Expression]) = HistUnionAgg(es.head)
 }
 
 /** Quantile at integer basis points against a sketch column (scalar,
   * codegen): rank = ((N−1)·bp)/10000 integer-exact, answer = bucket
   * lower bound. NULL for an empty sketch. */
 case class HistQuantile(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hist_quantile requires (sketch binary, int basis points), got " +
-        s"(${left.dataType}, ${right.dataType})")
-
+    extends BinaryKernel(HistQuantile.name, (BinaryType, IntegerType), LongType, NullIf("< 0L")) {
   override def nullSafeEval(sk: Any, bp: Any): Any = {
     val q = Hist.quantile(sk.asInstanceOf[Array[Byte]], bp.asInstanceOf[Int])
     if (q < 0L) null else q
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (sk, bp) => {
-      // freshName: with non-nullable children the block inlines unbraced
-      // into the shared method scope, so a fixed name collides when a
-      // projection evaluates hist_quantile more than once
-      val q = ctx.freshName("q")
-      s"""long $q = graft.functions.Hist.quantile($sk, $bp);
-         |if ($q < 0L) { ${ev.isNull} = true; } else { ${ev.value} = $q; }
-         |""".stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HistQuantile =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "hist_quantile"
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.Hist.quantile")
+}
+object HistQuantile extends SqlFunction("hist_quantile") {
+  def build(es: Seq[Expression]) = HistQuantile(es.head, es(1))
 }
 
 /** Total recorded count of a sketch column (scalar, codegen). */
-case class HistCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hist_count expects a sketch (binary) column, got ${child.dataType}")
-
-  override def nullSafeEval(sk: Any): Any =
-    Hist.count(sk.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.Hist.count($s)")
-
-  override protected def withNewChildInternal(newChild: Expression): HistCount =
-    copy(child = newChild)
-  override def prettyName: String = "hist_count"
+case class HistCount(child: Expression)
+    extends UnaryKernel(HistCount.name, BinaryType, LongType) {
+  override def nullSafeEval(sk: Any): Any = Hist.count(sk.asInstanceOf[Array[Byte]])
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.Hist.count")
+}
+object HistCount extends SqlFunction("hist_count") {
+  def build(es: Seq[Expression]) = HistCount(es.head)
 }
 
 object HistExpressions {
 
-  def histSketch(c: Column): Column =
-    GraftSqlShim.column(
-      HistSketchAgg(GraftSqlShim.expression(c)).toAggregateExpression())
+  def histSketch(c: Column): Column = column(c)(HistSketchAgg(_).toAggregateExpression())
 
-  def histUnion(c: Column): Column =
-    GraftSqlShim.column(
-      HistUnionAgg(GraftSqlShim.expression(c)).toAggregateExpression())
+  def histUnion(c: Column): Column = column(c)(HistUnionAgg(_).toAggregateExpression())
 
   def histQuantile(sketch: Column, bp: Column): Column =
-    GraftSqlShim.column(HistQuantile(GraftSqlShim.expression(sketch),
-      GraftSqlShim.expression(bp)))
+    column(sketch, bp)(HistQuantile(_, _))
 
-  def histCount(sketch: Column): Column =
-    GraftSqlShim.column(HistCount(GraftSqlShim.expression(sketch)))
+  def histCount(sketch: Column): Column = column(sketch)(HistCount(_))
 }

@@ -1,15 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType}
 
 import graft.functions.Hll
+import graft.plans.Kernel.{Call, column}
 
 /** Mergeable distinct-count sketches as FIRST-CLASS COLUMNS — the
   * custom-AGGREGATE capability (`TypedImperativeAggregate`) that the
@@ -76,7 +77,11 @@ case class HllSketchAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): HllSketchAgg =
     copy(child = newChild)
-  override def prettyName: String = "hll_sketch64"
+  override def prettyName: String = HllSketchAgg.name
+}
+object HllSketchAgg extends SqlFunction("hll_sketch64") {
+  def build(es: Seq[Expression]) =
+    HllSketchAgg(es.head, es.lift(1).fold(9)(intArg(_, "precision")))
 }
 
 /** Union (bytewise register max) of already-built sketches — the
@@ -97,47 +102,18 @@ case class HllUnionAgg(
     p: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[Array[Byte]]]
-  with UnaryLike[Expression] {
+  extends SketchUnionAgg[Array[Byte]] {
 
   Hll.requireP(p)
 
-  override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hll_union expects a sketch (binary) column, got ${child.dataType}")
-
-  override def createAggregationBuffer(): Option[Array[Byte]] = None
-
-  private def mergeInto(buf: Option[Array[Byte]],
-                        sk: Array[Byte]): Option[Array[Byte]] = buf match {
-    case None => Some(sk.clone())
-    case Some(regs) => Hll.merge(regs, sk); buf
-  }
-
-  override def update(buffer: Option[Array[Byte]],
-                      input: InternalRow): Option[Array[Byte]] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else mergeInto(buffer, v.asInstanceOf[Array[Byte]])
-  }
-
-  override def merge(buffer: Option[Array[Byte]],
-                     other: Option[Array[Byte]]): Option[Array[Byte]] =
-    other match {
-      case None => buffer
-      case Some(sk) => mergeInto(buffer, sk)
-    }
-
-  override def eval(buffer: Option[Array[Byte]]): Any =
-    buffer.getOrElse(new Array[Byte](Hll.numRegisters(p)))
-  override def serialize(buffer: Option[Array[Byte]]): Array[Byte] =
-    buffer.getOrElse(Array.emptyByteArray)
-  override def deserialize(storageFormat: Array[Byte]): Option[Array[Byte]] =
-    if (storageFormat.isEmpty) None else Some(storageFormat)
+  override protected def read(bytes: Array[Byte]): Array[Byte] = bytes
+  override protected def write(sketch: Array[Byte]): Array[Byte] = sketch
+  override protected def copyOf(sketch: Array[Byte]): Array[Byte] = sketch.clone()
+  override protected def mergeInto(into: Array[Byte], other: Array[Byte]): Unit =
+    Hll.merge(into, other)
+  override protected def empty: Any = new Array[Byte](Hll.numRegisters(p))
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HllUnionAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -145,44 +121,35 @@ case class HllUnionAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): HllUnionAgg =
     copy(child = newChild)
-  override def prettyName: String = "hll_union"
+  override def prettyName: String = HllUnionAgg.name
+}
+object HllUnionAgg extends SqlFunction("hll_union") {
+  def build(es: Seq[Expression]) =
+    HllUnionAgg(es.head, es.lift(1).fold(9)(intArg(_, "precision")))
 }
 
 /** Distinct-count estimate of a sketch column (scalar, codegen). */
-case class HllEstimate(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hll_estimate expects a sketch (binary) column, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    Hll.estimate(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Hll.estimate($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HllEstimate =
-    copy(child = newChild)
-  override def prettyName: String = "hll_estimate"
+case class HllEstimate(child: Expression)
+    extends UnaryKernel(HllEstimate.name, BinaryType, DoubleType) {
+  override def nullSafeEval(v: Any): Any = Hll.estimate(v.asInstanceOf[Array[Byte]])
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.Hll.estimate")
+}
+object HllEstimate extends SqlFunction("hll_estimate") {
+  def build(es: Seq[Expression]) = HllEstimate(es.head)
 }
 
 object HllExpressions {
 
   /** Sketch aggregate over a pre-hashed bigint column. */
   def hllSketch64(c: Column, p: Int): Column =
-    GraftSqlShim.column(
-      HllSketchAgg(GraftSqlShim.expression(c), p).toAggregateExpression())
+    column(c)(HllSketchAgg(_, p).toAggregateExpression())
 
   /** Union aggregate over a sketch column. */
   def hllUnion(c: Column, p: Int): Column =
-    GraftSqlShim.column(
-      HllUnionAgg(GraftSqlShim.expression(c), p).toAggregateExpression())
+    column(c)(HllUnionAgg(_, p).toAggregateExpression())
 
   /** Estimate from a sketch column. */
-  def hllEstimate(c: Column): Column =
-    GraftSqlShim.column(HllEstimate(GraftSqlShim.expression(c)))
+  def hllEstimate(c: Column): Column = column(c)(HllEstimate(_))
 
   /** Convenience: estimated distinct of a pre-hashed bigint column. */
   def hllCountDistinct(c: Column, p: Int = 9): Column =

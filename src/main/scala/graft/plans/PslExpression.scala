@@ -1,12 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Psl
+import graft.plans.Kernel.{Call, column}
 
 /** Public-suffix label count of a host column under a [[Psl]] rule
   * set: the kernel half of the PSL-backed
@@ -21,27 +22,13 @@ import graft.functions.Psl
   * with the task binary, ≤ label-count hash probes per row, fully
   * inside whole-stage codegen. */
 case class PslSuffixLabels(child: Expression, psl: Psl)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"psl_suffix_labels requires string input, got ${child.dataType}")
-  }
-  override def nullSafeEval(v: Any): Any =
-    psl.suffixLabels(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("psl", psl, "graft.functions.Psl")
-    defineCodeGen(ctx, ev, c => s"$ref.suffixLabels($c)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PslSuffixLabels =
-    copy(child = newChild)
-  override def prettyName: String = "psl_suffix_labels"
+    extends UnaryKernel("psl_suffix_labels", StringType, IntegerType) {
+  override def nullSafeEval(v: Any): Any = psl.suffixLabels(v.asInstanceOf[UTF8String])
+  override def kernel(ctx: CodegenContext) =
+    Call(reference(ctx, "psl", psl, "graft.functions.Psl") + ".suffixLabels")
 }
 
 object PslExpressions {
   /** Label count of `host`'s public suffix under `psl`. */
-  def pslSuffixLabels(host: Column, psl: Psl): Column =
-    GraftSqlShim.column(PslSuffixLabels(GraftSqlShim.expression(host), psl))
+  def pslSuffixLabels(host: Column, psl: Psl): Column = column(host)(PslSuffixLabels(_, psl))
 }

@@ -1,11 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.Kernel.{Call, column}
 
 /** `regexp_count` without materializing the matches (optimization
   * guide §1.2, per-task work): Spark's built-in is an alias for
@@ -19,37 +20,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * bit-identical to the built-in: same engine, same match walk, same
   * int. Null text → null, as the built-in. */
 case class RegexCount(child: Expression, regex: String)
-    extends UnaryExpression {
+    extends UnaryKernel("regex_count", StringType, IntegerType) {
 
   @transient private lazy val pattern: java.util.regex.Pattern =
     java.util.regex.Pattern.compile(regex)
 
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"regex_count requires string input, got ${child.dataType}")
-
   override def nullSafeEval(v: Any): Any =
     graft.functions.RegexOps.countMatches(v.asInstanceOf[UTF8String], pattern)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pattern", pattern,
-      "java.util.regex.Pattern")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.RegexOps.countMatches($c, $ref)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RegexCount =
-    copy(child = newChild)
-
-  override def prettyName: String = "regex_count"
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.RegexOps.countMatches",
+    reference(ctx, "pattern", pattern, "java.util.regex.Pattern"))
 }
 
 object RegexCountExpression {
   /** Count of non-overlapping matches of the CONSTANT `regex` in
     * `text` — a drop-in for `regexp_count(text, lit(regex))`. */
-  def regexCount(text: Column, regex: String): Column =
-    GraftSqlShim.column(RegexCount(GraftSqlShim.expression(text), regex))
+  def regexCount(text: Column, regex: String): Column = column(text)(RegexCount(_, regex))
 }

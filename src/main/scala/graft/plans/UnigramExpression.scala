@@ -1,14 +1,14 @@
 package graft.plans
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{UnigramOps, UnigramVocab}
+import graft.plans.Kernel.{Call, column}
 
 /** Unigram-LM Viterbi segmentation of a word column
   * (`unigram_encode`): the whole DP runs in ONE codegen kernel call
@@ -20,36 +20,11 @@ import graft.functions.{UnigramOps, UnigramVocab}
   * [[graft.operators.Unigram.encodeDocs]]. */
 case class UnigramEncode(child: Expression,
                          vocab: Either[UnigramVocab, Broadcast[UnigramVocab]])
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"unigram_encode requires string input, got ${child.dataType}")
-
+    extends UnaryKernel("unigram_encode", StringType, ArrayType(StringType, containsNull = false)) {
   override def nullSafeEval(v: Any): Any =
     UnigramOps.viterbi(v.asInstanceOf[UTF8String], ModelRef.get(vocab))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vocabCls = classOf[UnigramVocab].getName
-    val vocabVar = vocab match {
-      case Left(v) => ctx.addReferenceObj("uvocab", v, vocabCls)
-      case Right(bc) =>
-        val ref = ctx.addReferenceObj("uvocabBc", bc,
-          classOf[Broadcast[_]].getName)
-        ctx.addMutableState(vocabCls, "uvocab",
-          v => s"$v = ($vocabCls) $ref.value();")
-    }
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.UnigramOps.viterbi($c, $vocabVar)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UnigramEncode =
-    copy(child = newChild)
-
-  override def prettyName: String = "unigram_encode"
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.UnigramOps.viterbi",
+    reference(ctx, "uvocab", vocab, classOf[UnigramVocab].getName))
 }
 
 object UnigramExpression {
@@ -57,7 +32,6 @@ object UnigramExpression {
     // pieces (2 bytes a char in the serialized String) + micro scores
     val est = vocab.pieces.iterator.map(_.length.toLong * 2 + 40).sum +
       vocab.lpMicro.length.toLong * 8
-    GraftSqlShim.column(UnigramEncode(GraftSqlShim.expression(word),
-      ModelRef.of(vocab, est)))
+    column(word)(UnigramEncode(_, ModelRef.of(vocab, est)))
   }
 }

@@ -1,13 +1,20 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
+
+import graft.plans.Kernel.{Call, NewArray, column}
 
 /** Vector kernels for the ANN path. */
 object VecOps {
+
+  /** The input type of every vector kernel: array<double>, read with
+    * `getDouble`. Other element types fail at analysis rather than
+    * reading their bytes as doubles. */
+  val Vector: ArrayType = ArrayType(DoubleType)
 
   /** One-pass cosine similarity over two array<double> columns: dot and
     * both norms accumulate in a single loop, no intermediate arrays.
@@ -206,209 +213,133 @@ object VecOps {
 /** Hyperplane-LSH signature as a custom codegen expression; the plane
   * matrix rides along as a referenced object, not as inlined literals. */
 case class HyperplaneSig(child: Expression, planes: Array[Array[Double]])
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
+    extends UnaryKernel("hyperplane_sig", VecOps.Vector, LongType) {
   override def nullSafeEval(v: Any): Any =
     VecOps.hyperplaneSig(v.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("planes", planes, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.plans.VecOps.hyperplaneSig($c, $ref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSig =
-    copy(child = newChild)
-  override def prettyName: String = "hyperplane_sig"
+  override def kernel(ctx: CodegenContext) = Call("graft.plans.VecOps.hyperplaneSig",
+    reference(ctx, "planes", planes, "double[][]"))
 }
 
 /** Cosine similarity of two array<double> columns as a codegen binary
   * expression — a single kernel call inside whole-stage codegen. */
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
+case class CosineSim(left: Expression, right: Expression)
+    extends BinaryKernel(CosineSim.name, (VecOps.Vector, VecOps.Vector), DoubleType) {
   override def nullSafeEval(a: Any, b: Any): Any =
     VecOps.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.VecOps.cosine($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "cosine_sim"
+  override def kernel(ctx: CodegenContext) = Call("graft.plans.VecOps.cosine")
+}
+object CosineSim extends SqlFunction("cosine_sim") {
+  def build(es: Seq[Expression]) = CosineSim(es.head, es(1))
 }
 
 /** Dot product of two array<double> columns as a codegen expression. */
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
+case class DotProduct(left: Expression, right: Expression)
+    extends BinaryKernel(DotProduct.name, (VecOps.Vector, VecOps.Vector), DoubleType) {
   override def nullSafeEval(a: Any, b: Any): Any =
     VecOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.VecOps.dot($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "dot_product"
+  override def kernel(ctx: CodegenContext) = Call("graft.plans.VecOps.dot")
+}
+object DotProduct extends SqlFunction("dot_product") {
+  def build(es: Seq[Expression]) = DotProduct(es.head, es(1))
 }
 
 /** IVF cell assignment: index of the nearest (pre-normalized) centroid,
   * as a codegen expression — the centroid matrix rides along as a
   * referenced object exactly like [[HyperplaneSig]]'s planes. */
 case class NearestCell(child: Expression, cents: Array[Array[Double]])
-    extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+    extends UnaryKernel("nearest_cell", VecOps.Vector, IntegerType) {
   override def nullSafeEval(v: Any): Any =
     VecOps.nearestCentroid(v.asInstanceOf[ArrayData], cents)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cents", cents, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.plans.VecOps.nearestCentroid($c, $ref)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCell =
-    copy(child = newChild)
-  override def prettyName: String = "nearest_cell"
+  override def kernel(ctx: CodegenContext) = Call("graft.plans.VecOps.nearestCentroid",
+    reference(ctx, "cents", cents, "double[][]"))
 }
 
 /** The `nprobe` nearest centroid indices (best first), for the IVF
   * query-side multi-probe. */
 case class NearestCells(child: Expression, cents: Array[Array[Double]], nprobe: Int)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false)
+    extends UnaryKernel("nearest_cells", VecOps.Vector,
+      ArrayType(IntegerType, containsNull = false), NewArray) {
   override def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      VecOps.nearestCentroids(v.asInstanceOf[ArrayData], cents, nprobe))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cents", cents, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.plans.VecOps.nearestCentroids($c, $ref, $nprobe))")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCells =
-    copy(child = newChild)
-  override def prettyName: String = "nearest_cells"
+    VecOps.nearestCentroids(v.asInstanceOf[ArrayData], cents, nprobe)
+  override def kernel(ctx: CodegenContext) = Call("graft.plans.VecOps.nearestCentroids",
+    reference(ctx, "cents", cents, "double[][]"), nprobe)
 }
 
 /** JL random projection to `planes.length` dimensions as a codegen
   * expression — the (k × dim) Gaussian matrix rides along as a
   * referenced object exactly like [[HyperplaneSig]]'s planes. */
 case class RandomProject(child: Expression, planes: Array[Array[Double]])
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
+    extends UnaryKernel("random_project", VecOps.Vector,
+      ArrayType(DoubleType, containsNull = false), NewArray) {
   override def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      VecOps.randomProject(v.asInstanceOf[ArrayData], planes))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("planes", planes, "double[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.plans.VecOps.randomProject($c, $ref))")
-  }
-  override protected def withNewChildInternal(newChild: Expression): RandomProject =
-    copy(child = newChild)
-  override def prettyName: String = "random_project"
+    VecOps.randomProject(v.asInstanceOf[ArrayData], planes)
+  override def kernel(ctx: CodegenContext) = Call("graft.plans.VecOps.randomProject",
+    reference(ctx, "planes", planes, "double[][]"))
 }
 
 /** Largest |component| of an array<double> column (the symmetric
   * quantization range), as a codegen kernel. */
-case class VecMaxAbs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any =
-    VecOps.maxAbs(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VecOps.maxAbs($c)")
-  override protected def withNewChildInternal(newChild: Expression): VecMaxAbs =
-    copy(child = newChild)
-  override def prettyName: String = "vec_max_abs"
+case class VecMaxAbs(child: Expression)
+    extends UnaryKernel("vec_max_abs", VecOps.Vector, DoubleType) {
+  override def nullSafeEval(v: Any): Any = VecOps.maxAbs(v.asInstanceOf[ArrayData])
+  override def kernel(ctx: CodegenContext) = Call("graft.plans.VecOps.maxAbs")
 }
 
 /** Symmetric int8 quantization q_j = floor(v_j / scale + 0.5) as a
   * codegen kernel over (array<double>, double). */
 case class QuantizeI8(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false)
+    extends BinaryKernel("quantize_i8", (VecOps.Vector, DoubleType),
+      ArrayType(IntegerType, containsNull = false), NewArray) {
   override def nullSafeEval(v: Any, s: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      VecOps.quantizeI8(v.asInstanceOf[ArrayData], s.asInstanceOf[Double]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, s) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.plans.VecOps.quantizeI8($v, $s))")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): QuantizeI8 =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "quantize_i8"
+    VecOps.quantizeI8(v.asInstanceOf[ArrayData], s.asInstanceOf[Double])
+  override def kernel(ctx: CodegenContext) = Call("graft.plans.VecOps.quantizeI8")
 }
 
 /** PQ encode as a codegen expression — the m×ksub×dsub codebook rides
   * as a referenced object like [[NearestCell]]'s centroids. */
 case class PqEncode(child: Expression, books: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      VecOps.pqEncode(v.asInstanceOf[ArrayData], books))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("books", books, "double[][][]")
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.plans.VecOps.pqEncode($c, $ref))")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
-  override def prettyName: String = "pq_encode"
+    extends UnaryKernel("pq_encode", VecOps.Vector,
+      ArrayType(IntegerType, containsNull = false), NewArray) {
+  override def nullSafeEval(v: Any): Any = VecOps.pqEncode(v.asInstanceOf[ArrayData], books)
+  override def kernel(ctx: CodegenContext) = Call("graft.plans.VecOps.pqEncode",
+    reference(ctx, "books", books, "double[][][]"))
 }
 
 /** ADC lookup score over (codes array<int>, query index int); the
   * per-query LUT stack rides as a referenced object. */
 case class PqLutScore(left: Expression, right: Expression,
                       luts: Array[Array[Array[Double]]])
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
+    extends BinaryKernel("pq_lut_score", (ArrayType(IntegerType), IntegerType), DoubleType) {
   override def nullSafeEval(codes: Any, qi: Any): Any =
-    VecOps.pqLutScore(codes.asInstanceOf[ArrayData],
-      qi.asInstanceOf[Int], luts)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("luts", luts, "double[][][]")
-    defineCodeGen(ctx, ev, (c, q) =>
-      s"graft.plans.VecOps.pqLutScore($c, $q, $ref)")
-  }
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqLutScore =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "pq_lut_score"
+    VecOps.pqLutScore(codes.asInstanceOf[ArrayData], qi.asInstanceOf[Int], luts)
+  override def kernel(ctx: CodegenContext) = Call("graft.plans.VecOps.pqLutScore",
+    reference(ctx, "luts", luts, "double[][][]"))
 }
 
 object VecExpressions {
   def hyperplaneSig(c: Column, planes: Array[Array[Double]]): Column =
-    GraftSqlShim.column(HyperplaneSig(GraftSqlShim.expression(c), planes))
+    column(c)(HyperplaneSig(_, planes))
 
   def nearestCell(c: Column, cents: Array[Array[Double]]): Column =
-    GraftSqlShim.column(NearestCell(GraftSqlShim.expression(c), cents))
+    column(c)(NearestCell(_, cents))
 
   def nearestCells(c: Column, cents: Array[Array[Double]], nprobe: Int): Column =
-    GraftSqlShim.column(NearestCells(GraftSqlShim.expression(c), cents, nprobe))
+    column(c)(NearestCells(_, cents, nprobe))
 
-  def cosineSim(a: Column, b: Column): Column =
-    GraftSqlShim.column(CosineSim(GraftSqlShim.expression(a), GraftSqlShim.expression(b)))
+  def cosineSim(a: Column, b: Column): Column = column(a, b)(CosineSim(_, _))
 
-  def dotProduct(a: Column, b: Column): Column =
-    GraftSqlShim.column(DotProduct(GraftSqlShim.expression(a), GraftSqlShim.expression(b)))
+  def dotProduct(a: Column, b: Column): Column = column(a, b)(DotProduct(_, _))
 
   def randomProject(c: Column, planes: Array[Array[Double]]): Column =
-    GraftSqlShim.column(RandomProject(GraftSqlShim.expression(c), planes))
+    column(c)(RandomProject(_, planes))
 
-  def vecMaxAbs(c: Column): Column =
-    GraftSqlShim.column(VecMaxAbs(GraftSqlShim.expression(c)))
+  def vecMaxAbs(c: Column): Column = column(c)(VecMaxAbs(_))
 
-  def quantizeI8(v: Column, scale: Column): Column =
-    GraftSqlShim.column(QuantizeI8(GraftSqlShim.expression(v), GraftSqlShim.expression(scale)))
+  def quantizeI8(v: Column, scale: Column): Column = column(v, scale)(QuantizeI8(_, _))
 
   def pqEncode(v: Column, books: Array[Array[Array[Double]]]): Column =
-    GraftSqlShim.column(PqEncode(GraftSqlShim.expression(v), books))
+    column(v)(PqEncode(_, books))
 
-  def pqLutScore(codes: Column, qIdx: Column,
-                 luts: Array[Array[Array[Double]]]): Column =
-    GraftSqlShim.column(PqLutScore(GraftSqlShim.expression(codes),
-      GraftSqlShim.expression(qIdx), luts))
+  def pqLutScore(codes: Column, qIdx: Column, luts: Array[Array[Array[Double]]]): Column =
+    column(codes, qIdx)(PqLutScore(_, _, luts))
 }

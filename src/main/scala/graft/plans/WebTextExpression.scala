@@ -1,10 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.Kernel.{Call, NullIfNull, column}
 
 /** Main-content extraction kernel ([[graft.functions.WebText
   * .mainContent]]) as a codegen expression: block-segmented
@@ -15,25 +17,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage span. Returns struct(n_blocks INT, n_good INT,
   * main_text STRING). */
 case class MainContent(child: Expression, minChars: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_blocks", IntegerType, nullable = false),
-    StructField("n_good", IntegerType, nullable = false),
-    StructField("main_text", StringType, nullable = false)))
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"main_content requires string input, got ${child.dataType}")
-  }
+    extends UnaryKernel("main_content", StringType, StructType(Seq(
+      StructField("n_blocks", IntegerType, nullable = false),
+      StructField("n_good", IntegerType, nullable = false),
+      StructField("main_text", StringType, nullable = false)))) {
   override def nullSafeEval(v: Any): Any =
     graft.functions.WebText.mainContent(v.asInstanceOf[UTF8String], minChars)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WebText.mainContent($c, $minChars)")
-  override protected def withNewChildInternal(newChild: Expression): MainContent =
-    copy(child = newChild)
-  override def prettyName: String = "main_content"
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.WebText.mainContent", minChars)
 }
 
 /** HTML character-reference decode ([[graft.functions.HtmlEntities
@@ -43,22 +33,10 @@ case class MainContent(child: Expression, minChars: Int)
   * formulation re-scans the string once per named entity — this is
   * ONE pass per row inside the scan's whole-stage span. */
 case class HtmlEntityDecode(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes() = {
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"html_entity_decode requires string input, got ${child.dataType}")
-  }
+    extends UnaryKernel("html_entity_decode", StringType, StringType) {
   override def nullSafeEval(v: Any): Any =
     graft.functions.HtmlEntities.decode(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlEntities.decode($c)")
-  override protected def withNewChildInternal(
-      newChild: Expression): HtmlEntityDecode =
-    copy(child = newChild)
-  override def prettyName: String = "html_entity_decode"
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.HtmlEntities.decode")
 }
 
 /** Legacy-charset decode ([[graft.functions.Charsets.decode]]) as a
@@ -71,41 +49,22 @@ case class HtmlEntityDecode(child: Expression)
   * WHATWG alias table nor the JVM knows, so the caller coalesces to
   * the WHATWG UTF-8 default as an explicit, testable fallback. */
 case class CharsetDecode(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes() = {
-    if (left.dataType == BinaryType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"charset_decode requires (binary, string), got " +
-        s"(${left.dataType}, ${right.dataType})")
-  }
+    extends BinaryKernel("charset_decode", (BinaryType, StringType), StringType, NullIfNull) {
   override def nullSafeEval(body: Any, label: Any): Any =
     graft.functions.Charsets.decode(
       body.asInstanceOf[Array[Byte]], label.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, l) =>
-      s"""${ev.value} = graft.functions.Charsets.decode($b, $l);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CharsetDecode =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "charset_decode"
+  override def kernel(ctx: CodegenContext) = Call("graft.functions.Charsets.decode")
 }
 
 object WebTextExpressions {
   /** Main-content extraction over a string column. */
-  def mainContent(c: Column, minChars: Int = 25): Column =
-    GraftSqlShim.column(MainContent(GraftSqlShim.expression(c), minChars))
+  def mainContent(c: Column, minChars: Int = 25): Column = column(c)(MainContent(_, minChars))
 
   /** HTML character-reference decode over a string column. */
-  def htmlEntityDecode(c: Column): Column =
-    GraftSqlShim.column(HtmlEntityDecode(GraftSqlShim.expression(c)))
+  def htmlEntityDecode(c: Column): Column = column(c)(HtmlEntityDecode(_))
 
   /** Legacy-charset decode of a binary column under a per-row label
     * column; null when the label is unknown. */
   def charsetDecode(body: Column, label: Column): Column =
-    GraftSqlShim.column(CharsetDecode(
-      GraftSqlShim.expression(body), GraftSqlShim.expression(label)))
+    column(body, label)(CharsetDecode(_, _))
 }

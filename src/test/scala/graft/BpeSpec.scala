@@ -128,8 +128,7 @@ class BpeSpec extends AnyFunSuite {
     val docs = Seq((1L, "low lower lowest low low"), (2L, "newest newer new"))
       .toDF("doc_id", "text")
     val merges = Bpe.learn(docs, "text", numMerges = 5)
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "bpeart").toString + "/merges"
+    val path = TestSpark.tempDir("bpeart") + "/merges"
     Bpe.saveMerges(spark, merges, path)
     val loaded = Bpe.loadMerges(spark, path)
     assert(loaded == merges)

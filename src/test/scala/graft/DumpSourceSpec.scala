@@ -13,11 +13,7 @@ class DumpSourceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmpDir(): String = {
-    val d = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "dumpspec").toString
-    d
-  }
+  private def tmpDir(): String = TestSpark.tempDir("dumpspec")
 
   test("round-trips length-prefixed docs (ght2dm.go:202-236 framing)") {
     val dir = tmpDir()

@@ -46,7 +46,7 @@ class EntryContractSpec extends AnyFunSuite {
     // uncited; the contract is now mechanical: every SparkEntry.queries
     // key must appear somewhere in the §2 operator-inventory section
     val survey = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/repo/SURVEY.md")), "UTF-8")
+      java.nio.file.Paths.get("SURVEY.md")), "UTF-8")
     val s2 = survey.substring(
       survey.indexOf("## §2 Operator inventory"),
       survey.indexOf("## §3"))
@@ -58,7 +58,7 @@ class EntryContractSpec extends AnyFunSuite {
   test("SURVEY.md §2 row labels are unique — the round-13 verdict found " +
     "57f naming two different rows, which key-level pins cannot catch") {
     val survey = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/repo/SURVEY.md")), "UTF-8")
+      java.nio.file.Paths.get("SURVEY.md")), "UTF-8")
     val s2 = survey.substring(
       survey.indexOf("## §2 Operator inventory"),
       survey.indexOf("## §3"))
@@ -74,7 +74,7 @@ class EntryContractSpec extends AnyFunSuite {
   test("SURVEY.md §7 prose cites the CURRENT query count — the round-12 " +
     "verdict's prose drift, pinned mechanically like the §2 table") {
     val survey = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/repo/SURVEY.md")), "UTF-8")
+      java.nio.file.Paths.get("SURVEY.md")), "UTF-8")
     val s7 = survey.substring(survey.indexOf("## §7"))
     val m = "exposed as (\\d+) queries".r.findFirstMatchIn(s7)
     assert(m.isDefined, "SURVEY §7 must state 'exposed as N queries'")

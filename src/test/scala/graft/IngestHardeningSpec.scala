@@ -18,7 +18,7 @@ class IngestHardeningSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(Paths.get("/root/repo/target"), prefix).toString
+    TestSpark.tempDir(prefix)
 
   private def writeDocs(path: String, docs: Seq[String]): Unit =
     DumpSource.writeDump(path, docs.iterator.map(_.getBytes(UTF_8)))

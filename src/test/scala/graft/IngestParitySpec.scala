@@ -13,9 +13,6 @@ import graft.sources.DumpSource
 class IngestParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def tmpDir(prefix: String): String = Files.createTempDirectory(
-    Files.createDirectories(Paths.get("target")), prefix).toAbsolutePath.toString
-
   private def user(id: Long, login: String, kind: String, updated: String,
                    followers: Long) =
     Bson.docBody(Seq("id" -> id, "login" -> login, "type" -> kind,
@@ -183,7 +180,7 @@ class IngestParitySpec extends AnyFunSuite {
 
   test("run() and a single-batch runStream land the same rows in every " +
     "table of every entity without a dimension dependency") {
-    val dir = tmpDir("ingest_parity")
+    val dir = TestSpark.tempDir("ingest_parity")
     dumps.foreach { case (entity, day1, day2) =>
       Files.createDirectories(Paths.get(s"$dir/dumps/$entity"))
       DumpSource.writeDump(s"$dir/dumps/$entity/2014-01-01.bson", day1.iterator)
@@ -212,7 +209,7 @@ class IngestParitySpec extends AnyFunSuite {
 
   test("runStream rejects an unknown entity before a query starts, " +
     "naming the known ones") {
-    val dir = tmpDir("ingest_unknown")
+    val dir = TestSpark.tempDir("ingest_unknown")
     val ckpt = s"$dir/_ck"
     val e = intercept[IllegalArgumentException] {
       Ingest.runStream(spark, "comments", s"$dir/comments", s"$dir/wh", ckpt)

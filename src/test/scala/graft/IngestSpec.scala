@@ -21,8 +21,7 @@ class IngestSpec extends AnyFunSuite {
     DumpSource.writeDump(path, docs.iterator.map(_.getBytes(UTF_8)))
 
   private lazy val root: String = {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest").toString
+    val dir = TestSpark.tempDir("ingest")
     Seq("users", "repos", "org_members", "repo_collaborators")
       .foreach(e => Files.createDirectories(Paths.get(s"$dir/$e")))
 
@@ -128,8 +127,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("continuous ingestion: streamed dumps merge incrementally into " +
     "the warehouse, idempotent per github id") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_stream").toString
+    val dir = TestSpark.tempDir("ingest_stream")
     Files.createDirectories(Paths.get(s"$dir/users"))
     val wh = s"$dir/warehouse"; val ckpt = s"$dir/_ckpt"
     writeDocs(s"$dir/users/2014-01-01.bson", Seq(
@@ -157,8 +155,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("continuous repo ingestion: ids continue across batches, " +
     "re-ships and replays insert nothing") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_repos_stream").toString
+    val dir = TestSpark.tempDir("ingest_repos_stream")
     Files.createDirectories(Paths.get(s"$dir/repos"))
     val wh = s"$dir/warehouse"; val ckpt = s"$dir/_ckpt"
     writeDocs(s"$dir/repos/2014-01-01.bson", Seq(
@@ -189,8 +186,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("continuous relation ingestion: members resolve against streamed " +
     "dims; unresolved rows drop and resolve on re-ship") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_rel_stream").toString
+    val dir = TestSpark.tempDir("ingest_rel_stream")
     Seq("users", "org_members").foreach(e =>
       Files.createDirectories(Paths.get(s"$dir/$e")))
     val wh = s"$dir/warehouse"
@@ -228,8 +224,7 @@ class IngestSpec extends AnyFunSuite {
   test("a REAL BSON-framed users dump (mongodump shape) parses through " +
     "the same pipeline and matches the JSON-framed result exactly") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest-bson").toString
+    val dir = TestSpark.tempDir("ingest-bson")
     Files.createDirectories(Paths.get(s"$dir/users"))
     // the SAME three users as the JSON fixture's day-1 dump, as framed
     // BSON bodies: int32/int64 mixed on purpose (mongo exports both)
@@ -266,8 +261,7 @@ class IngestSpec extends AnyFunSuite {
   test("a BSON-framed repos dump decodes owner.login through the nested " +
     "struct and runs the full importRepos pipeline") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest-bson-r").toString
+    val dir = TestSpark.tempDir("ingest-bson-r")
     Files.createDirectories(Paths.get(s"$dir/repos"))
     DumpSource.writeDump(s"$dir/repos/2014-01-01.bson", Iterator(
       Bson.docBody(Seq("id" -> 100L, "name" -> "ght2dm",
@@ -291,8 +285,7 @@ class IngestSpec extends AnyFunSuite {
   test("a BSON-framed commits dump decodes the parents ARRAY and nested " +
     "commit struct; importCommits dedups per sha first-wins") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest-bson-c").toString
+    val dir = TestSpark.tempDir("ingest-bson-c")
     Files.createDirectories(Paths.get(s"$dir/commits"))
     def commitDoc(sha: String, msg: String, date: String,
                   parents: Seq[String], login: Any = "alice") =
@@ -335,8 +328,7 @@ class IngestSpec extends AnyFunSuite {
   test("a BSON-framed events dump decodes actor/repo/org structs; " +
     "importEvents dedups per event id") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest-bson-e").toString
+    val dir = TestSpark.tempDir("ingest-bson-e")
     Files.createDirectories(Paths.get(s"$dir/events"))
     def eventDoc(id: String, typ: String, at: String, org: Any) =
       Bson.docBody(Seq("id" -> id, "type" -> typ, "public" -> true,
@@ -365,8 +357,7 @@ class IngestSpec extends AnyFunSuite {
   test("BSON-framed issues and pull_requests dumps decode; latest-wins " +
     "per id keeps the newest shipped state") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest-bson-ip").toString
+    val dir = TestSpark.tempDir("ingest-bson-ip")
     Files.createDirectories(Paths.get(s"$dir/issues"))
     Files.createDirectories(Paths.get(s"$dir/pull_requests"))
     def issueDoc(id: Long, state: String, updated: String,
@@ -424,8 +415,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("watchers dedup to first starred_at per (login, repo)") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest-bson-w").toString
+    val dir = TestSpark.tempDir("ingest-bson-w")
     Files.createDirectories(Paths.get(s"$dir/watchers"))
     def w(id: Long, login: String, at: String) =
       Bson.docBody(Seq("id" -> id, "login" -> login, "repo" -> "ght2dm",
@@ -446,8 +436,7 @@ class IngestSpec extends AnyFunSuite {
   test("continuous commits ingestion: shards stream in, first shipped " +
     "copy wins per sha across batches") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_commits_stream").toString
+    val dir = TestSpark.tempDir("ingest_commits_stream")
     Files.createDirectories(Paths.get(s"$dir/commits"))
     val wh = s"$dir/warehouse"; val ckpt = s"$dir/_ckpt"
     def commitDoc(sha: String, msg: String, date: String) =
@@ -502,8 +491,7 @@ class IngestSpec extends AnyFunSuite {
   test("comment dumps (both anchor kinds) and fork dumps decode and " +
     "dedup through the shared comment schema") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest-bson-cf").toString
+    val dir = TestSpark.tempDir("ingest-bson-cf")
     Files.createDirectories(Paths.get(s"$dir/commit_comments"))
     Files.createDirectories(Paths.get(s"$dir/forks"))
     DumpSource.writeDump(s"$dir/commit_comments/2014-01-01.bson", Iterator(
@@ -562,8 +550,7 @@ class IngestSpec extends AnyFunSuite {
   test("run() routes the extended entity folders: commits land as a " +
     "table, both comment folders merge into one comments table") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest-ext-run").toString
+    val dir = TestSpark.tempDir("ingest-ext-run")
     Seq("commits", "commit_comments", "issue_comments")
       .foreach(e => Files.createDirectories(Paths.get(s"$dir/$e")))
     DumpSource.writeDump(s"$dir/commits/2014-01-01.bson", Iterator(
@@ -610,8 +597,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("run() on a relation-only config resolves dims from an existing " +
     "warehouse, and fails with guidance when neither source exists") {
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_relonly").toString
+    val dir = TestSpark.tempDir("ingest_relonly")
     Seq("users", "org_members").foreach(e =>
       Files.createDirectories(Paths.get(s"$dir/$e")))
     writeDocs(s"$dir/users/2014-01-01.bson", Seq(
@@ -640,8 +626,7 @@ class IngestSpec extends AnyFunSuite {
     "a re-import lands a NEW generation (readers keep their snapshot) " +
     "and relation-only configs resolve dims from the versioned layout") {
     import graft.sources.Warehouse
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_vers").toString
+    val dir = TestSpark.tempDir("ingest_vers")
     Seq("users", "org_members").foreach(e =>
       Files.createDirectories(Paths.get(s"$dir/$e")))
     writeDocs(s"$dir/users/2014-01-01.bson", Seq(
@@ -678,8 +663,7 @@ class IngestSpec extends AnyFunSuite {
   test("continuous issues/PR ingestion: newest updated_at wins across " +
     "batches; an older replay never overwrites newer warehouse state") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_issues_stream").toString
+    val dir = TestSpark.tempDir("ingest_issues_stream")
     Seq("issues", "pull_requests").foreach(e =>
       Files.createDirectories(Paths.get(s"$dir/$e")))
     val wh = s"$dir/warehouse"
@@ -747,8 +731,7 @@ class IngestSpec extends AnyFunSuite {
   test("continuous comments/watchers/forks ingestion: folder-tagged " +
     "comment kinds merge latest-wins; stars and forks keep the earliest") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_cwf_stream").toString
+    val dir = TestSpark.tempDir("ingest_cwf_stream")
     Seq("commit_comments", "issue_comments", "watchers", "forks")
       .foreach(e => Files.createDirectories(Paths.get(s"$dir/$e")))
     val wh = s"$dir/warehouse"
@@ -829,8 +812,7 @@ class IngestSpec extends AnyFunSuite {
   test("repo_labels, geo_locations, followers decode, dedup by their " +
     "natural keys, and route through run()") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_r8_kinds").toString
+    val dir = TestSpark.tempDir("ingest_r8_kinds")
     Seq("repo_labels", "geo_locations", "followers").foreach(e =>
       Files.createDirectories(Paths.get(s"$dir/$e")))
     // label 42 re-ships recolored: the NEWEST dump file's copy wins
@@ -896,8 +878,7 @@ class IngestSpec extends AnyFunSuite {
   test("issue_events, pull_request_comments and pull_request_commits " +
     "decode and route through run() — the full GHTorrent dump surface") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_r8_tail").toString
+    val dir = TestSpark.tempDir("ingest_r8_tail")
     Seq("issue_events", "pull_request_comments", "pull_request_commits")
       .foreach(e => Files.createDirectories(Paths.get(s"$dir/$e")))
     // event 1 re-ships identically (timeline entries are immutable);
@@ -977,8 +958,7 @@ class IngestSpec extends AnyFunSuite {
     "pull_request_commits ingestion: each kind's merge policy holds " +
     "across micro-batches") {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_r8_streams").toString
+    val dir = TestSpark.tempDir("ingest_r8_streams")
     Seq("repo_labels", "geo_locations", "followers", "issue_events",
       "pull_request_commits")
       .foreach(e => Files.createDirectories(Paths.get(s"$dir/$e")))
@@ -1125,8 +1105,7 @@ class IngestSpec extends AnyFunSuite {
 
   test("the ght2dm CLI's verbose row counts read a versioned warehouse " +
     "through its generations: every run exits 0") {
-    val dir = Files.createTempDirectory(
-      Paths.get("target"), "ingest_vcli").toAbsolutePath.toString
+    val dir = TestSpark.tempDir("ingest_vcli")
     Files.createDirectories(Paths.get(s"$dir/users"))
     writeDocs(s"$dir/users/2014-01-01.bson", Seq(
       """{"id":1,"login":"alice","type":"User","name":"Alice","email":"a@x.org","created_at":"2013-01-01T00:00:00Z","updated_at":"","followers":1,"following":1,"hireable":true}"""))
@@ -1149,8 +1128,7 @@ class IngestSpec extends AnyFunSuite {
     "merge keeps its complete old snapshot; a new reader sees the merge") {
     import graft.sources.Warehouse
     import org.apache.spark.sql.functions.col
-    val tbl = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "whgen").toString + "/users"
+    val tbl = TestSpark.tempDir("whgen") + "/users"
 
     def batch(rows: (Long, String, String)*) =
       rows.toSeq.toDF("id", "v", "updated_at")
@@ -1228,8 +1206,7 @@ class IngestSpec extends AnyFunSuite {
     "commits a new snapshot, no rename-swap artifacts touch the root") {
     import graft.functions.Bson
     import graft.sources.Warehouse
-    val dir = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "ingest_vstream").toString
+    val dir = TestSpark.tempDir("ingest_vstream")
     Files.createDirectories(Paths.get(s"$dir/commits"))
     val wh = s"$dir/warehouse"; val ckpt = s"$dir/_ckpt"
     Warehouse.initVersioned(spark, s"$wh/commits") // declared ONCE
@@ -1280,8 +1257,7 @@ class IngestSpec extends AnyFunSuite {
   test("the repos stream onto VERSIONED roots reads its existing tables " +
     "through the generation layout: ids continue, no swap artifacts") {
     import graft.sources.Warehouse
-    val dir = Files.createTempDirectory(
-      Paths.get("target"), "ingest_vrepos").toAbsolutePath.toString
+    val dir = TestSpark.tempDir("ingest_vrepos")
     Files.createDirectories(Paths.get(s"$dir/repos"))
     val wh = s"$dir/warehouse"; val ckpt = s"$dir/_ckpt"
     val roots = Seq(s"$wh/repositories", s"$wh/gh_repositories")
@@ -1317,8 +1293,7 @@ class IngestSpec extends AnyFunSuite {
     "empty versioned layout as not-yet-readable") {
     import graft.sources.Warehouse
     import org.apache.spark.sql.functions.col
-    val tbl = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "whpin").toString + "/docs"
+    val tbl = TestSpark.tempDir("whpin") + "/docs"
     // layout declared but nothing committed: not readable as data
     Warehouse.initVersioned(spark, tbl)
     assert(Warehouse.isVersionedRoot(spark, tbl))
@@ -1339,8 +1314,7 @@ class IngestSpec extends AnyFunSuite {
     // see the new generation
     assert(Warehouse.readAuto(spark, tbl).count() == 3)
     // on a PLAIN parquet dir the pin degrades to the path itself
-    val plain = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "whplain").toString + "/t"
+    val plain = TestSpark.tempDir("whplain") + "/t"
     Seq((1L, "x")).toDF("id", "v").write.parquet(plain)
     assert(Warehouse.resolveAuto(spark, plain) == plain)
     assert(Warehouse.readAt(spark, plain).count() == 1)
@@ -1350,7 +1324,7 @@ class IngestSpec extends AnyFunSuite {
     * entity) with re-shipped users and repos; returns (root, docs). */
   private def fourEntityDumps(prefix: String): (String, Long) = {
     import graft.functions.Bson
-    val dir = Files.createTempDirectory(Paths.get("target").toAbsolutePath, prefix).toString
+    val dir = TestSpark.tempDir(prefix)
     val shards = 4
     def login(k: Int) = if (k % 20 == 0) s"org_$k" else s"user_$k"
     def day(i: Int) = java.time.LocalDate.of(2014, 1, 1).plusDays(i.toLong)

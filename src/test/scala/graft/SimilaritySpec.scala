@@ -270,8 +270,7 @@ class SimilaritySpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, TestSpark.sf0001)
     val queries = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ivfidx").toString + "/idx"
+    val path = TestSpark.tempDir("ivfidx") + "/idx"
     val cents = Similarity.buildIvfIndex(emb, path, nlist = 8, iters = 1)
     // probing every cell == exhaustive search -> brute-force parity
     val all = Similarity.ivfTopKIndexed(spark, path, cents, queries,
@@ -302,8 +301,7 @@ class SimilaritySpec extends AnyFunSuite {
     // IVF: build on half A (quantizer trains there), append half B
     // with the SAME centroids; compare against a one-shot index over
     // the full corpus under those centroids
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ivfappend").toString
+    val base = TestSpark.tempDir("ivfappend")
     val cents = Similarity.buildIvfIndex(halfA, s"$base/incr", nlist = 8)
     Similarity.appendToIvfIndex(halfB, s"$base/incr", cents)
     Similarity.appendToIvfIndex(emb, s"$base/full", cents)
@@ -347,8 +345,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("IVF append drift guard: a distribution-shifted delta trips the " +
     "balance warning; an in-distribution delta does not") {
     val emb = Tables.embeddings(spark, TestSpark.sf0001)
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ivfdrift").toString
+    val base = TestSpark.tempDir("ivfdrift")
     val cents = Similarity.buildIvfIndex(emb, s"$base/idx", nlist = 8)
     val builtBalance = Similarity.ivfCellStats(spark, s"$base/idx")._2
     // in-distribution delta (the corpus itself, re-keyed): balance
@@ -633,8 +630,7 @@ class SimilaritySpec extends AnyFunSuite {
       "IVFPQ at nprobe=nlist diverged from pure PQ ADC")
     // persisted layout: same answers as inline, and the probe scan
     // carries the cell partition filter (reads only probed cells)
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ivfpq").toString + "/idx"
+    val path = TestSpark.tempDir("ivfpq") + "/idx"
     val (cents, books) = Similarity.buildIvfPqIndex(corpus, path,
       nlist = 8, m = 4, ksub = 8)
     val indexed = Similarity.ivfPqTopKIndexed(spark, path, cents, books,

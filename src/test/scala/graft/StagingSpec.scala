@@ -13,8 +13,7 @@ class StagingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("staged write round-trips and partition-prunes (ght2dm.go:494-548)") {
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "staging").toString
+    val dir = TestSpark.tempDir("staging")
     val orders = Tables.orders(spark, TestSpark.sf0001)
       .withColumn("o_status", $"o_orderstatus")
     Staging.writeStaged(orders, dir, partitionByCol = Some("o_status"))
@@ -30,8 +29,7 @@ class StagingSpec extends AnyFunSuite {
     "order, bounded files, re-run determinism") {
     import graft.operators.Shards
     import graft.plans.HashExpressions
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "shards").toString
+    val dir = TestSpark.tempDir("shards")
     val docs = Tables.documents(spark, TestSpark.sf0001)
       .select($"doc_id", $"text",
         when(pmod($"doc_id", lit(10)) < 8, "train").otherwise("val")
@@ -69,8 +67,7 @@ class StagingSpec extends AnyFunSuite {
     }
     // pure function of the data: a second run over re-partitioned
     // input produces identical per-group ordered contents
-    val dir2 = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "shards").toString
+    val dir2 = TestSpark.tempDir("shards")
     Shards.writeTrainingShards(docs.repartition(17), dir2, "split",
       HashExpressions.fnv64($"text"), numShards = 4, orderCol = $"doc_id",
       maxRecordsPerFile = 40)
@@ -180,6 +177,18 @@ class StagingSpec extends AnyFunSuite {
       .as[(Double, Double)].head()
     assert(math.abs(got._1 - 1.0 / math.sqrt(2)) < 1e-12)
     assert(got._2 == 11.0)
+    // the kernels read array<double> only: any other element type fails
+    // at analysis and names the function, where it used to read the
+    // elements' bytes as doubles (array<float>: dot 4.0000019 for 14;
+    // array<bigint>: dot and cosine 0.0) or throw at run time
+    for {
+      v <- Seq("CAST(array(1, 2, 3) AS array<float>)", "array(1L, 2L, 3L)")
+      f <- Seq("dot_product", "cosine_sim")
+      query <- Seq(s"SELECT $f(v, v) FROM (SELECT $v AS v)", s"SELECT $f($v, $v)")
+    } {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(query).collect())
+      assert(e.getMessage.contains(s"$f requires (array<double>, array<double>)"), e.getMessage)
+    }
   }
 
   test("mix64 and repratio64 are callable from SQL and match the kernels") {

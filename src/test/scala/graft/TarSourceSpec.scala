@@ -13,7 +13,7 @@ class TarSourceSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpDir(): String =
-    Files.createTempDirectory(Paths.get("/root/repo/target"), "tarspec").toString
+    TestSpark.tempDir("tarspec")
 
   private def readTar(paths: Seq[String], splitBytes: Long = 0) =
     spark.read.format("graft.sources.TarDataSource")

@@ -13,7 +13,7 @@ class WarcSourceSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpDir(): String =
-    Files.createTempDirectory(Paths.get("/root/repo/target"), "warcspec").toString
+    TestSpark.tempDir("warcspec")
 
   private def readWarc(paths: Seq[String], splitBytes: Long = 0) =
     spark.read.format("graft.sources.WarcDataSource")
